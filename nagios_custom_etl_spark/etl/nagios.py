@@ -3,10 +3,15 @@ composable DataFrame transforms over Nagios-shaped inputs (FIXTURES.md §B).
 
 Every step is a declarative plan node; the reference's row-at-a-time loops,
 file handoffs and first-row schema inference disappear into Catalyst
-lineage + fixed StructTypes. Citations point at the behavior re-expressed.
+lineage + fixed StructTypes. EP2 parses, gates and dedups all ten service
+families as one points frame and materializes it once per run; the
+per-family frames it returns are projections of that one result.
+Citations point at the behavior re-expressed.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -109,9 +114,68 @@ def host_inventory(members_json: DataFrame, keep_groups: tuple[str, ...] = ()) -
 
 
 # ---------------------------------------------------------------------------
-# EP2 — perf extraction: array→wide pivot per service family, completeness
-# gate, cross-run dedup
+# EP2 — perf extraction: one points frame per run (array → fixed value
+# slots, completeness gate, cross-run dedup), projected per service family
 # ---------------------------------------------------------------------------
+
+_SLOTS = tuple(f"_v{i}" for i in range(max(map(len, SERVICE_KEYS.values()))))
+
+
+class WideFamilies(dict):
+    """``{service_name: wide family DataFrame}`` that also carries the one
+    ``points`` frame every family is a projection of, so a later run can
+    dedup against it without repacking the families."""
+
+    def __init__(self, points: DataFrame):
+        super().__init__((svc, _family(points, svc)) for svc in SERVICE_KEYS)
+        self.points = points
+
+
+def _family(points: DataFrame, service: str) -> DataFrame:
+    """One family's rows of ``points``, its slots named by SERVICE_KEYS."""
+    return points.filter(F.col("service_name") == service).select(
+        *KEY_COLUMNS, *(F.col(s).alias(k) for s, k in zip(_SLOTS, SERVICE_KEYS[service]))
+    )
+
+
+def _points(perf_raw: DataFrame) -> DataFrame:
+    """KEY_COLUMNS + value slots ``_v0.._vN`` for every family at once.
+    Slot i holds the i-th normalized array element while i is below the
+    family's arity and is null past it, so extra elements are ignored.
+    T6 completeness gate (extract.py:95-99): the spool may not have
+    flushed every metric yet — a row missing a key or any slot within its
+    arity is dropped now (NaN and garbage normalize to null), and the 25h
+    overlap re-delivers it next run. Unknown services are dropped."""
+    arities = (F.lit(x) for svc, keys in SERVICE_KEYS.items() for x in (svc, len(keys)))
+    arity = F.create_map(*arities)[F.col("service_name")]
+    slots = [F.when(arity > i, numeric_normalize(F.get("v", i))).alias(s) for i, s in enumerate(_SLOTS)]
+    complete = F.col("host_name").isNotNull() & F.col("timestamp").isNotNull()
+    for i, s in enumerate(_SLOTS):
+        complete &= F.col(s).isNotNull() | (arity <= i)
+    return (
+        perf_raw.filter(F.col("service_name").isin(*SERVICE_KEYS))
+        .select("host_name", epoch_to_datetime_str("t").alias("timestamp"), "service_name", *slots)
+        .filter(complete)
+    )
+
+
+def _points_of(wide: dict[str, DataFrame]) -> DataFrame:
+    """The points frame behind ``wide``: the carried one, or a plain
+    per-family dict repacked into slots with one union."""
+    if isinstance(wide, WideFamilies):
+        return wide.points
+    fams = [
+        df.filter(F.col("service_name") == svc).select(
+            *KEY_COLUMNS,
+            *(
+                (F.col(keys[i]) if i < len(keys) else F.lit(None)).cast("double").alias(s)
+                for i, s in enumerate(_SLOTS)
+            ),
+        )
+        for svc, df in wide.items()
+        if (keys := SERVICE_KEYS.get(svc))
+    ]
+    return functools.reduce(DataFrame.unionByName, fams)
 
 
 def rrd_points_to_wide(perf_raw: DataFrame) -> dict[str, DataFrame]:
@@ -121,25 +185,12 @@ def rrd_points_to_wide(perf_raw: DataFrame) -> dict[str, DataFrame]:
 
     Input shape (FIXTURES.md §B perf_raw): host_name, service_name,
     t (epoch s), v (array<string>, may contain 'NaN'/garbage).
-    Output: {service_name: wide df with KEY_COLUMNS + typed value cols}.
+    Output: a :class:`WideFamilies` ``{service_name: wide df with
+    KEY_COLUMNS + typed value cols}``. Every family is a lazy projection
+    of one gated points frame, so the array is parsed and gated in one
+    pass however many families a consumer reads.
     """
-    out: dict[str, DataFrame] = {}
-    for service, keys in SERVICE_KEYS.items():
-        fam = perf_raw.filter(F.col("service_name") == service)
-        value_cols = [
-            numeric_normalize(F.get("v", i)).alias(k) for i, k in enumerate(keys)
-        ]
-        wide = fam.select(
-            "host_name",
-            epoch_to_datetime_str("t").alias("timestamp"),
-            "service_name",
-            *value_cols,
-        )
-        # T6 completeness gate (extract.py:95-99): the spool may not have
-        # flushed every metric yet — drop partial rows now, the 25h overlap
-        # re-delivers them next run.
-        out[service] = wide.dropna(how="any")
-    return out
+    return WideFamilies(_points(perf_raw))
 
 
 def route_metric_type(service_name: Column | str = "service_name") -> Column:
@@ -165,19 +216,25 @@ def extract_pipeline(
     keep_groups: tuple[str, ...] = HOSTGROUP_FILTER,
 ) -> dict[str, DataFrame]:
     """EP2 end-to-end (extract.py main, 135-161): host filter → keyspace
-    restriction → per-family pivot + gate → cross-run dedup. One lazy plan
-    per family; the scan/fetch parallelism that was a 5-thread pool is now
-    source partitioning."""
+    restriction → pivot + gate → cross-run dedup, each done once over all
+    families. The deduped points are materialized once with a lazy
+    ``localCheckpoint`` (the first action over any family computes them)
+    and the returned :class:`WideFamilies` projects them, so routed
+    appends read computed rows instead of re-running the scan, gate and
+    dedup per family; the trade-off is that checkpoint blocks are not
+    lineage-recoverable if an executor is lost. A ``previous_wide``
+    returned by this function is deduped against through its carried
+    points; a plain per-family dict is repacked. The scan/fetch
+    parallelism that was a 5-thread pool is now source partitioning."""
     selected = hosts.filter(F.col("host_group").isin(*keep_groups)).select("host_name")
     scoped = perf_raw.join(F.broadcast(selected), "host_name", "left_semi")
-    wide = rrd_points_to_wide(scoped)
+    points = _points(scoped)
     if previous_wide:
-        wide = {
-            svc: cross_run_dedup_batch(df, previous_wide[svc])
-            for svc, df in wide.items()
-            if svc in previous_wide
-        } | {svc: df for svc, df in wide.items() if svc not in previous_wide}
-    return wide
+        points = cross_run_dedup_batch(points, _points_of(previous_wide))
+    # lazy, not eager: the previous run's points then materialize inside
+    # this run's dedup job instead of a job of their own (measured fewer
+    # jobs and less CPU per cron run than eager)
+    return WideFamilies(points.localCheckpoint(eager=False))
 
 
 # ---------------------------------------------------------------------------

@@ -2055,6 +2055,15 @@ def mor_delete(deletes: DataFrame, root: str, keys: list[str]) -> int:
     m = _read_manifest(spark, root, parent)
     _check_mor_keys(m, keys)
     keyset = deletes.select(*keys).dropDuplicates(keys)
+    # rebalance: the key payload is O(deleted keys), unknown up front —
+    # lands as one right-sized file at small scale instead of spraying
+    # the upstream partitioning into N tiny key files (each of which
+    # every later read's anti-join must open), splits when huge
+    dfiles, _ = _write_data_files(keyset, root, collect_stats=False, rebalance=True)
+    if not _footer_rows(root, dfiles):  # no keys: nothing to commit (no-op)
+        if dfiles:  # drop the empty key dir eagerly
+            fsio.delete(spark, f"{root}/{dfiles[0].split('/', 1)[0]}")
+        return parent
     extra: dict = {}
     if change_feed_enabled(spark, root):
         # the feed's `delete` rows carry the OLD row values (Delta CDF),
@@ -2080,11 +2089,6 @@ def mor_delete(deletes: DataFrame, root: str, keys: list[str]) -> int:
         extra["change_files"] = _write_change_files(
             pre.withColumn("_change_type", F.lit("delete")), root
         )
-    # rebalance: the key payload is O(deleted keys), unknown up front —
-    # lands as one right-sized file at small scale instead of spraying
-    # the upstream partitioning into N tiny key files (each of which
-    # every later read's anti-join must open), splits when huge
-    dfiles, _ = _write_data_files(keyset, root, collect_stats=False, rebalance=True)
     version = parent + 1
     seqs = {f: int(m.get("seqs", {}).get(f, 0)) for f in m["files"]}
     entry = {"files": sorted(dfiles), "keys": list(keys), "seq": version}
@@ -2100,6 +2104,21 @@ def mor_delete(deletes: DataFrame, root: str, keys: list[str]) -> int:
         partition_spec=m.get("partition_spec"),
         extra=extra,
     )
+
+
+def _footer_rows(root: str, dfiles: list[str]) -> int:
+    """Row count of just-written files from their parquet footers, read
+    on the driver (zero Spark jobs); 0 also when the write emitted no
+    part file at all."""
+    import pyarrow.parquet as pq
+
+    from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
+
+    n = 0
+    for f in dfiles:
+        fs, path = _open_fs(f"{root}/{f}")
+        n += pq.read_metadata(path, filesystem=fs).num_rows
+    return n
 
 
 def _dv_summary(root: str, dfiles: list[str]) -> tuple[int, list[str]]:

@@ -4,10 +4,17 @@ cross-run dedup, EP3 status points, T5 routing."""
 
 from __future__ import annotations
 
+import functools
+from collections import Counter
+
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from nagios_custom_etl_spark.etl.nagios import (
+    HOSTGROUP_FILTER,
     HOSTGROUP_MEMBERS_SCHEMA,
+    KEY_COLUMNS,
     SERVICE_KEYS,
     cross_run_dedup_batch,
     extract_pipeline,
@@ -17,6 +24,8 @@ from nagios_custom_etl_spark.etl.nagios import (
     rrd_points_to_wide,
     status_points_pipeline,
 )
+from nagios_custom_etl_spark.functions.scalar import epoch_to_datetime_str, numeric_normalize
+from nagios_custom_etl_spark.operators import snapshots as S
 
 
 @pytest.fixture(scope="module")
@@ -97,6 +106,115 @@ def test_ep2_full_pipeline_with_dedup(spark, perf_raw):
     # second run re-delivers the same data → everything dedups away
     run2 = extract_pipeline(hosts, perf_raw, previous_wide=run1)
     assert all(df.count() == 0 for df in run2.values())
+
+
+def _per_family_extract(hosts, raw, previous=None):
+    """The per-family EP2 formula the fused extract must reproduce:
+    filter(service) → select → dropna → exceptAll(previous family)."""
+    selected = hosts.filter(F.col("host_group").isin(*HOSTGROUP_FILTER)).select("host_name")
+    # materialized once: the host scope is not what this formula pins
+    scoped = raw.join(F.broadcast(selected), "host_name", "left_semi").localCheckpoint()
+    out = {}
+    for svc, keys in SERVICE_KEYS.items():
+        fam = (
+            scoped.filter(F.col("service_name") == svc)
+            .select(
+                "host_name",
+                epoch_to_datetime_str("t").alias("timestamp"),
+                "service_name",
+                *(numeric_normalize(F.get("v", i)).alias(k) for i, k in enumerate(keys)),
+            )
+            .dropna(how="any")
+        )
+        if previous and svc in previous:
+            fam = fam.exceptAll(previous[svc].select(*fam.columns))
+        out[svc] = fam
+    return out
+
+
+def _family_rows(wide):
+    """Each family's dtypes, and every family's rows as one multiset of
+    (service, row as json) collected in one action."""
+    tagged = [
+        df.select(F.lit(svc).alias("svc"), F.to_json(F.struct(*df.columns)).alias("row"))
+        for svc, df in wide.items()
+    ]
+    rows = Counter(map(tuple, functools.reduce(DataFrame.unionByName, tagged).collect()))
+    return {svc: df.dtypes for svc, df in wide.items()}, rows
+
+
+@pytest.fixture(scope="module")
+def planted_runs(spark):
+    """(hosts, previous run's raw rows, current run's raw rows) with every
+    edge the completeness gate and the cross-run dedup must keep."""
+    hosts = spark.createDataFrame(
+        [("web01", "linux-servers"), ("win01", "windows-servers"), ("misc01", "other")],
+        "host_name string, host_group string",
+    )
+    t0, t1, t2 = 1700000000, 1700000300, 1700000600
+    full = {svc: [str(i + 1.25) for i in range(len(keys))] for svc, keys in SERVICE_KEYS.items()}
+    prev = [(h, svc, t0, v) for h in ("web01", "win01") for svc, v in full.items()] + [
+        ("web01", "Disk Usage tmp", t1, ["1", "2", "3"]),  # delivered once before ...
+        ("web01", "CPU Usage", t1, ["42.5"]),
+    ]
+    cur = [(h, svc, t, v) for h in ("web01", "win01") for svc, v in full.items() for t in (t0, t2)] + [
+        ("web01", "Disk Usage tmp", t1, ["1", "2", "3"]),  # ... and twice now:
+        ("web01", "Disk Usage tmp", t1, ["1", "2", "3"]),  # exactly one survives
+        ("web01", "CPU Usage", t1, ["42.5", "7"]),  # too long: extra element ignored → deduped
+        ("win01", "CPU Usage", t1, ["13", "x", "y"]),  # too long: kept as 13.0
+        ("web01", "Swap Usage", t1, ["1.0", "NaN", "3.0"]),  # NaN → dropped
+        ("web01", "Disk Usage home", t1, ["1", "garbage", "3"]),  # garbage → dropped
+        ("win01", "Memory Usage", t1, ["1", "2", "3"]),  # short → dropped
+        ("win01", "Disk Usage var", t1, []),  # empty → dropped
+        ("web01", "CPU Usage", None, ["5"]),  # no timestamp → dropped
+        ("misc01", "CPU Usage", t1, ["9.9"]),  # host outside the kept groups
+        ("web01", "Mystery Service", t1, ["1"]),  # unknown service
+    ]
+    schema = "host_name string, service_name string, t long, v array<string>"
+    return hosts, spark.createDataFrame(prev, schema), spark.createDataFrame(cur, schema)
+
+
+def test_ep2_fused_extract_matches_per_family_formula(planted_runs):
+    hosts, prev_raw, cur_raw = planted_runs
+    want_prev = _per_family_extract(hosts, prev_raw)
+    prev = extract_pipeline(hosts, prev_raw)
+    assert _family_rows(prev) == _family_rows(want_prev)
+    want = _family_rows(_per_family_extract(hosts, cur_raw, want_prev))
+    # the planted multiset case: delivered twice now, once before → one copy
+    assert [n for (svc, row), n in want[1].items() if svc == "Disk Usage tmp" and "22:18:20" in row] == [1]
+    # carried result (the cron pattern)
+    assert _family_rows(extract_pipeline(hosts, cur_raw, previous_wide=prev)) == want
+    # a hand-built plain dict; the families it leaves out are not deduped
+    partial = {svc: want_prev[svc] for svc in ("CPU Usage", "Disk Usage tmp", "Memory Usage")}
+    assert _family_rows(extract_pipeline(hosts, cur_raw, previous_wide=partial)) == _family_rows(
+        _per_family_extract(hosts, cur_raw, partial)
+    )
+
+
+def test_ep2_routed_appends_run_one_pass_per_table(spark, planted_runs, tmp_path):
+    """A cron run's 4 routed appends read the materialized extract: the
+    disk append (7 unioned families) runs no more Spark jobs than the
+    single-family cpu append."""
+    hosts, prev_raw, cur_raw = planted_runs
+    wide = extract_pipeline(hosts, cur_raw, previous_wide=extract_pipeline(hosts, prev_raw))
+    routed = {}
+    for svc, df in wide.items():
+        route = svc.split()[0].lower()
+        if route == "disk":  # 7 mounts, one table: canonical value names
+            df = df.toDF(*KEY_COLUMNS, *SERVICE_KEYS["Disk Usage root"])
+        routed[route] = routed[route].unionByName(df) if route in routed else df
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for route, df in routed.items():
+            sc.setJobGroup(f"etl-append-{route}", route)
+            S.append(df, str(tmp_path / route))
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs[route] = len(sc.statusTracker().getJobIdsForGroup(f"etl-append-{route}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(jobs) == {"cpu", "memory", "disk", "swap"}
+    assert 1 <= jobs["disk"] <= jobs["cpu"], jobs
 
 
 def test_cross_run_dedup_partial_overlap(spark):

@@ -1636,6 +1636,17 @@ def test_mor_delete_is_metadata_only_and_read_applies_it(spark, root):
     assert _rows(S.read_snapshot(spark, root, 1)) == [(i, f"r{i}") for i in range(4)]
 
 
+def test_mor_delete_of_no_keys_is_a_noop(spark, root):
+    """An empty deletes frame writes no key rows (one empty part file, or
+    none at all under AQE empty-relation propagation): nothing is
+    committed, since a delete entry with no files would break every
+    later read of the table."""
+    S.append(_df(spark, 0, 4).coalesce(1), root)  # v1
+    assert S.mor_delete(spark.createDataFrame([], "i int"), root, keys=["i"]) == 1
+    assert S.latest_version(spark, root) == 1
+    assert _rows(S.read_snapshot(spark, root)) == [(i, f"r{i}") for i in range(4)]
+
+
 def test_mor_upsert_delete_before_insert_ordering(spark, root):
     S.append(_df(spark, 0, 4).coalesce(1), root)  # v1
     up = spark.createDataFrame([Row(i=2, s="NEW2"), Row(i=9, s="r9")], "i int, s string")
