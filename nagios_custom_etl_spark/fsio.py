@@ -107,9 +107,10 @@ def _local_path(spark, path: str) -> str | None:
     return path if isloc else None
 
 
-# (scheme, authority) -> pyarrow FileSystem (client construction is the
-# expensive part for object stores; the FS object is thread-safe)
-_PA_FS_CACHE: dict[tuple[str, str], object] = {}
+# (scheme, authority) -> (pyarrow FileSystem, fs-native prefix of the
+# authority's paths) — client construction is the expensive part for
+# object stores; the FS object is thread-safe
+_PA_FS_CACHE: dict[tuple[str, str], tuple[object, str]] = {}
 
 # Hadoop scheme aliases pyarrow resolves under its canonical scheme
 _PA_SCHEME_ALIASES = {"s3a": "s3", "s3n": "s3"}
@@ -130,7 +131,7 @@ def _pa_fs(path: str):
     rename_nooverwrite), whose no-overwrite rename guarantee pyarrow
     does not provide. ``file://`` URIs with a remote authority also
     fall back (pyarrow would silently drop the host)."""
-    from urllib.parse import urlparse
+    from urllib.parse import unquote, urlparse
 
     m = _SCHEME_RE.match(path)
     if not m:
@@ -143,24 +144,25 @@ def _pa_fs(path: str):
     uri = path if parsed.scheme == scheme else path.replace(
         f"{parsed.scheme}:", f"{scheme}:", 1
     )
-    hit = _PA_FS_CACHE.get(key)
+    # fs-native path without re-constructing the client: from_uri maps
+    # the URI path (percent-decoded, trailing slash dropped) under a
+    # per-authority prefix — "bucket" on s3/gs, "container" on abfss,
+    # "" on hdfs/file. The prefix is taken from what from_uri returned
+    # on the first call, so a hit resolves exactly as that call would
+    # have (a per-scheme rule here dropped the abfss container).
+    tail = unquote(parsed.path).rstrip("/")
+    hit = _PA_FS_CACHE.get(key) if tail else None
     if hit is not None:
-        # fs-native path without re-constructing the client: bucket
-        # stores address objects as "bucket/key" (netloc + path), path
-        # filesystems (hdfs, file) keep the authority in the FS itself
-        p = (
-            f"{parsed.netloc}{parsed.path}"
-            if scheme in ("s3", "gs")
-            else parsed.path
-        )
-        return hit, p
+        fs, prefix = hit
+        return fs, prefix + tail
     try:
         from pyarrow import fs as pafs
 
         fs, p = pafs.FileSystem.from_uri(uri)
     except Exception:  # noqa: BLE001 — scheme pyarrow can't serve
         return None
-    _PA_FS_CACHE[key] = fs
+    if tail and p.endswith(tail):
+        _PA_FS_CACHE[key] = (fs, p[: len(p) - len(tail)])
     return fs, p
 
 
@@ -172,11 +174,18 @@ def _fs(spark, path: str):
 
 def write_text(spark, path: str, text: str) -> None:
     """Write (overwrite) a small text file."""
+    write_bytes(spark, path, text.encode("utf-8"))
+
+
+def write_bytes(spark, path: str, data) -> None:
+    """Write (overwrite) a small file with ``data`` (any bytes-like
+    object): the OS path when local, pyarrow.fs for a remote URI it can
+    serve, else Hadoop."""
     lp = _local_path(spark, path)
     if lp is not None:
         os.makedirs(os.path.dirname(lp) or "/", exist_ok=True)
-        with open(lp, "w", encoding="utf-8") as fh:
-            fh.write(text)
+        with open(lp, "wb") as fh:
+            fh.write(data)
         return
     pf = _pa_fs(path)
     if pf is not None:
@@ -185,12 +194,12 @@ def write_text(spark, path: str, text: str) -> None:
         if parent:
             fs.create_dir(parent, recursive=True)
         with fs.open_output_stream(p) as out:
-            out.write(text.encode("utf-8"))
+            out.write(data)
         return
     fs, jpath, _ = _fs(spark, path)
     out = fs.create(jpath, True)
     try:
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
 

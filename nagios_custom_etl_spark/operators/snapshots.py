@@ -31,13 +31,16 @@ point on HDFS/local; on object stores it maps to a conditional PUT
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
+import operator
 import re
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from nagios_custom_etl_spark import fsio
 
@@ -1193,24 +1196,31 @@ def _stats_entry(r, stats_cols: list[str], int_cols: list[str]) -> dict:
 
 
 def _single_file_stats(root: str, relpath: str, stats_cols: list[str]) -> dict:
-    """Stats entry for ONE just-written file, computed on the driver via
-    ``pyarrow`` instead of a read-back Spark job — legal only when the
-    write is provably SMALL (``_write_data_files`` checks the listed
-    byte total against ``_DRIVER_STATS_MAX_BYTES``) and only
-    for INTEGER stats columns, where every aggregate is exact by
-    construction: min/max skip nulls exactly like ``F.min``/``F.max``,
-    the sum is carried in decimal128(38,0) — the same arbitrary-
-    precision lattice the Spark path uses — and the null count is the
-    column's. Float columns fall back to the Spark job (NaN ordering
-    differs between engines). Scheme-portable via pyarrow.fs (x156)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    """Stats entry for ONE just-written file: a bounded driver read of
+    its stats columns through :func:`_table_stats` (scheme-portable via
+    pyarrow.fs, x156)."""
     import pyarrow.parquet as pq
 
     from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
 
     fs, path = _open_fs(f"{root}/{relpath}")
-    t = pq.read_table(path, columns=stats_cols, filesystem=fs)
+    return _table_stats(pq.read_table(path, columns=stats_cols, filesystem=fs), stats_cols)
+
+
+def _table_stats(t, stats_cols: list[str]) -> dict:
+    """The driver-side stats kernel: the manifest stats entry of one
+    file's rows, held as a pyarrow table, instead of a read-back Spark
+    job. Called on a just-written small file (:func:`_single_file_stats`)
+    and on the in-memory table a driver write lands (:func:`_write_batch`).
+    Legal only for INTEGER stats columns, where every aggregate is exact
+    by construction: min/max skip nulls exactly like ``F.min``/``F.max``,
+    the sum is carried in decimal128(38,0) — the same arbitrary-
+    precision lattice the Spark path uses — and the null count is the
+    column's. Float columns take the Spark job (NaN ordering differs
+    between engines)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     entry: dict = {"__rows": t.num_rows}
     if t.num_rows == 0:
         return entry
@@ -1231,11 +1241,218 @@ def _single_file_stats(root: str, relpath: str, stats_cols: list[str]) -> dict:
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint")
 
-#: ceiling for computing write stats on the DRIVER via pyarrow instead
-#: of a distributed read-back job: the whole write's bytes (known from
-#: the listing) must fit comfortably in one bounded driver pass. Writes
-#: above it — the actual at-scale case — take the Spark stats job.
+#: ceiling for the DRIVER passes of a write: the Arrow bytes a small
+#: batch may be collected into for a driver-written file, and the listed
+#: bytes of a Spark-written write whose stats are read back on the
+#: driver via pyarrow instead of a distributed job. Writes above it —
+#: the actual at-scale case — take the Spark write and the Spark stats
+#: job.
 _DRIVER_STATS_MAX_BYTES = 16 * 1024 * 1024
+
+
+#: Arrow bytes of one value of each FIXED-width leaf type a
+#: driver-written parquet file encodes exactly as Spark's writer does
+#: (checked type by type: equal footer fingerprints, equal read-back
+#: rows). Strings and binary (:data:`_VAR_LEAVES`) encode exactly too
+#: and cost an offset plus their payload. UDTs (ML vectors), intervals,
+#: variant, void and char/varchar are absent and take the Spark write.
+_LEAF_BYTES = {
+    T.BooleanType: 1, T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4,
+    T.LongType: 8, T.FloatType: 4, T.DoubleType: 8, T.DecimalType: 16,
+    T.DateType: 4, T.TimestampType: 8, T.TimestampNTZType: 8,
+}
+_VAR_LEAVES = (T.StringType, T.BinaryType)
+
+#: the variable-length Arrow bytes (string/binary payloads, array and
+#: map contents) one row may carry on the driver-write path; a batch
+#: with a wider row takes the Spark write. With it every collected row
+#: has a known ceiling, so the prefix a driver write collects is
+#: bounded in BYTES, not only in rows.
+_DRIVER_VAR_ROW_BYTES = 1024
+
+
+#: spark.sql.parquet.compression.codec -> Spark's file name infix; the
+#: codec name is pyarrow's too. Other codecs take the Spark write.
+_PA_CODECS = {"snappy": ".snappy", "gzip": ".gz", "zstd": ".zstd", "none": ""}
+
+
+def _driver_write_plan(spark: SparkSession, schema) -> dict | None:
+    """The ``pq.write_table`` options under which a pyarrow file of
+    ``schema`` is what Spark's parquet writer would emit in this session
+    — or None when no such options exist and the write must go through
+    Spark. Decided from the schema and the writer confs alone, before
+    any data moves:
+
+    - every leaf type is in :data:`_LEAF_BYTES` or :data:`_VAR_LEAVES`
+      and no struct level has duplicate (case-insensitive) names, which
+      Spark's write refuses;
+    - the codec maps (:data:`_PA_CODECS`) and the legacy (Hive) layout
+      is off;
+    - dates and timestamps are written without calendar rebasing;
+    - ``timestamp`` follows ``spark.sql.parquet.outputTimestampType``:
+      INT96 (the default) needs pyarrow's
+      ``use_deprecated_int96_timestamps``, which would also turn a
+      ``timestamp_ntz`` into a ``timestamp``, so a schema holding both
+      kinds (nested ones included) takes the Spark write;
+      TIMESTAMP_MILLIS takes it too."""
+    kinds: set = set()
+
+    def supported(dt) -> bool:
+        if isinstance(dt, T.StructType):
+            names = [f.name.lower() for f in dt.fields]
+            return len(set(names)) == len(names) and all(
+                supported(f.dataType) for f in dt.fields
+            )
+        if isinstance(dt, T.ArrayType):
+            return supported(dt.elementType)
+        if isinstance(dt, T.MapType):
+            return supported(dt.keyType) and supported(dt.valueType)
+        kinds.add(type(dt))
+        return type(dt) in _LEAF_BYTES or type(dt) in _VAR_LEAVES
+
+    if not supported(schema):
+        return None
+    conf = spark.conf
+    codec = conf.get("spark.sql.parquet.compression.codec").lower()
+    codec = "none" if codec == "uncompressed" else codec
+    if codec not in _PA_CODECS or conf.get("spark.sql.parquet.writeLegacyFormat") == "true":
+        return None
+    int96 = False
+    if kinds & {T.DateType, T.TimestampType, T.TimestampNTZType}:
+        for k in ("datetimeRebaseModeInWrite", "int96RebaseModeInWrite"):
+            if conf.get(f"spark.sql.parquet.{k}") != "CORRECTED":
+                return None
+    if T.TimestampType in kinds:
+        out = conf.get("spark.sql.parquet.outputTimestampType")
+        if out == "INT96" and T.TimestampNTZType not in kinds:
+            int96 = True
+        elif out != "TIMESTAMP_MICROS":
+            return None
+    return {"compression": codec, "use_deprecated_int96_timestamps": int96}
+
+
+def _arrow_bytes(c, dt):
+    """(fixed, variable) Arrow bytes of the value ``c`` of a type
+    :func:`_driver_write_plan` accepts: the fixed part an int, the
+    variable part — string/binary payloads, array and map contents — a
+    Column that counts a null as 0, or None for a fixed-width type."""
+    from pyspark.sql import functions as F
+
+    if isinstance(dt, T.StructType):
+        parts = [_arrow_bytes(c.getField(f.name), f.dataType) for f in dt.fields]
+        var = [v for _, v in parts if v is not None]
+        return sum(f for f, _ in parts), (functools.reduce(operator.add, var) if var else None)
+    if isinstance(dt, (T.ArrayType, T.MapType)):
+        arrays = (
+            [(c, dt.elementType)] if isinstance(dt, T.ArrayType)
+            else [(F.map_keys(c), dt.keyType), (F.map_values(c), dt.valueType)]
+        )
+        # F.aggregate builds its merge lambda on the spot, so ``e`` is
+        # this element type
+        var = [
+            F.coalesce(
+                F.aggregate(a, F.lit(0).cast("bigint"), lambda acc, x: acc + _value_bytes(x, e)),
+                F.lit(0),
+            )
+            for a, e in arrays
+        ]
+        return 4, functools.reduce(operator.add, var)
+    if type(dt) in _VAR_LEAVES:
+        return 4, F.coalesce(F.octet_length(c), F.lit(0))
+    return _LEAF_BYTES[type(dt)], None
+
+
+def _value_bytes(c, dt):
+    """All Arrow bytes of the value ``c`` of type ``dt`` (an int or a
+    Column; see :func:`_arrow_bytes`)."""
+    fixed, var = _arrow_bytes(c, dt)
+    return fixed if var is None else var + fixed
+
+
+def _write_table_file(
+    spark: SparkSession, t, schema, root: str, sub: str, opts: dict
+) -> tuple[str, int]:
+    """Land the Arrow table ``t`` as ``<sub>/part-00000-<uuid>-c000….parquet``
+    under ``root`` with ``pq.write_table`` options ``opts`` (from
+    :func:`_driver_write_plan`), carrying the row-schema and version
+    metadata Spark's writer stamps; returns (relative path, bytes). No
+    ``ARROW:schema`` is stored, so readers see only the parquet types,
+    as with a Spark-written file. The bytes go through
+    :func:`fsio.write_bytes`, which resolves the destination."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = f"part-00000-{uuid.uuid4()}-c000{_PA_CODECS[opts['compression']]}.parquet"
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        t.replace_schema_metadata({
+            "org.apache.spark.version": spark.version,
+            "org.apache.spark.sql.parquet.row.metadata": schema.json(),
+        }),
+        buf, store_schema=False, **opts,
+    )
+    data = buf.getvalue()
+    fsio.write_bytes(spark, f"{root}/{sub}/{name}", data)
+    return f"{sub}/{name}", data.size
+
+
+def _driver_batch(df: DataFrame):
+    """The whole batch as ONE in-memory Arrow table plus its write
+    options, when a driver-written file can match Spark's
+    (:func:`_driver_write_plan`) and the batch fits
+    :data:`_DRIVER_STATS_MAX_BYTES`; else None (the Spark write).
+
+    The collect is ONE Spark job over a prefix bounded in bytes: ``k + 1``
+    rows, ``k`` = the cap over a row's ceiling — its fixed Arrow bytes,
+    plus :data:`_DRIVER_VAR_ROW_BYTES` when the schema has variable-
+    length parts. Those parts are measured per row inside the job
+    (:func:`_arrow_bytes`); a row over the ceiling ships with them
+    nulled and a flag set, so no collected row exceeds it and the
+    driver holds at most about the cap. A ``k + 1``-th row, a flagged
+    row, or Arrow bytes over the cap mean the batch is too big, and the
+    caller writes it through Spark after all."""
+    from pyspark.sql import functions as F
+
+    opts = _driver_write_plan(df.sparkSession, df.schema)
+    if opts is None:
+        return None
+    fields = df.schema.fields
+    cols = [F.col("`" + f.name.replace("`", "``") + "`") for f in fields]
+    sizes = [_arrow_bytes(c, f.dataType) for c, f in zip(cols, fields)]
+    var = [v for _, v in sizes if v is not None]
+    row = sum(fixed for fixed, _ in sizes)
+    probe, flag = df, None
+    if var:
+        row += _DRIVER_VAR_ROW_BYTES
+        big = functools.reduce(operator.add, var) > _DRIVER_VAR_ROW_BYTES
+        flag = "__oversize"
+        while flag.lower() in {c.lower() for c in df.columns}:
+            flag += "_"
+        probe = df.select(
+            *[
+                c if v is None else F.when(~big, c).alias(f.name)
+                for c, f, (_, v) in zip(cols, fields, sizes)
+            ],
+            big.alias(flag),
+        )
+    k = _DRIVER_STATS_MAX_BYTES // max(1, row)
+    if k < 1:
+        return None
+    t = probe.limit(k + 1).toArrow()
+    if t.num_rows > k or t.nbytes > _DRIVER_STATS_MAX_BYTES:
+        return None
+    if flag is not None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if pc.any(t[flag]).as_py():
+            return None
+        t = t.drop_columns([flag])
+        # the nulling projection made every variable column nullable
+        t = t.cast(pa.schema([
+            a.with_nullable(f.nullable) for a, f in zip(t.schema, fields)
+        ]))
+    return t, opts
 
 
 def _norm_pcols(partition_by) -> list[str]:
@@ -1257,6 +1474,7 @@ def _write_data_files(
     collect_stats: bool = True,
     single_file: bool = False,
     rebalance: bool = False,
+    driver: bool = False,
 ) -> tuple[list[str], dict]:
     """Write ``df`` into an immutable uniquely-named data directory and
     return (part files as relative paths, per-file stats). Files are
@@ -1293,15 +1511,75 @@ def _write_data_files(
     ``rebalance=True`` is the SCALE-ADAPTIVE variant of ``single_file``
     (r14 verdict: a forced ``repartition(1)`` funnels an unbounded
     payload through one task): an AQE REBALANCE hint sizes the output
-    partitions from the actual shuffle bytes — a kilobyte batch lands
-    as ONE file exactly like ``single_file`` (measured), a multi-GB
-    batch splits into right-sized files with the write staying parallel
-    (guide §2: derive partitioning from input size, not a constant).
-    Used by the DV position writes, whose matched-row payload is
-    unknown before the write by design (the one-pass find)."""
-    spark = df.sparkSession
+    partitions from the actual shuffle bytes, so a multi-GB batch splits
+    into right-sized files with the write staying parallel (guide §2:
+    derive partitioning from input size, not a constant). Used by the
+    DV position writes, whose matched-row payload is unknown before the
+    write by design (the one-pass find), and by the streaming sinks.
+    The hint needs AQE: where AQE is off — it is in every foreachBatch
+    frame of a STATEFUL streaming query, which Spark runs without AQE —
+    the hint is a plain round-robin exchange into
+    ``spark.sql.shuffle.partitions`` files.
+
+    DRIVER WRITE (``driver=True``, unpartitioned only): ONE Spark job
+    collects a byte-bounded prefix of the batch as Arrow
+    (:func:`_driver_batch`); when the whole batch fits
+    :data:`_DRIVER_STATS_MAX_BYTES` (and no row carries more than
+    :data:`_DRIVER_VAR_ROW_BYTES` of variable-length data) it lands as
+    ONE pyarrow-written file in the same ``data-<uuid>/part-….parquet``
+    layout, with its stats taken from the in-memory table
+    (:func:`_table_stats`) — no Spark write job (task, commit-protocol
+    renames, ``_SUCCESS``, listing) and no stats read-back. The file is
+    the one Spark would write: equal footer schema fingerprint (driver-
+    and Spark-written groups still coalesce into one scan leg), same
+    types read back, Spark's row metadata; ``timestamp`` columns go
+    INT96 under Spark's default ``outputTimestampType``, and a schema
+    holding both timestamp kinds takes the Spark write (see
+    :func:`_driver_write_plan`). One file per small commit holds with
+    AQE off too. A batch over the cap and a schema or conf the driver
+    file cannot match take the Spark write below, unchanged, AFTER the
+    prefix job — which re-runs the batch's upstream. So only callers
+    whose batch is already materialized (a persisted frame) or whose
+    parent paid an equal probe anyway (the streaming sink's emptiness
+    check) pass ``driver=True``; a COW rewrite or a query-body append,
+    whose over-cap upstream would run twice, does not."""
     pcols = _norm_pcols(partition_by)
+    small = _driver_batch(df) if driver and not pcols else None
+    return _write_batch(
+        df, small, root, stats_cols, pcols, collect_stats, single_file, rebalance
+    )
+
+
+def _write_batch(
+    df: DataFrame,
+    small,
+    root: str,
+    stats_cols: list[str] | None,
+    pcols: list[str],
+    collect_stats: bool,
+    single_file: bool,
+    rebalance: bool,
+) -> tuple[list[str], dict]:
+    """:func:`_write_data_files` once the driver-write decision is made:
+    ``small`` is :func:`_driver_batch`'s (table, options) to land as one
+    driver-written file, or None for the Spark write."""
+    spark = df.sparkSession
     sub = f"data-{uuid.uuid4().hex[:12]}"
+    if small is not None:
+        t, opts = small
+        rel, nbytes = _write_table_file(spark, t, df.schema, root, sub, opts)
+        if not collect_stats:
+            return [rel], {}
+        cols = stats_cols or []
+        dtypes = dict(df.dtypes)
+        if all(dtypes.get(c) in _INT_TYPES for c in cols):
+            entry = _table_stats(t, cols)
+        else:  # float stats columns: the Spark stats job
+            entry = _file_stats(spark, root, sub, [rel], cols, schema=df.schema).get(
+                rel, {"__rows": 0}
+            )
+        entry["__bytes"] = nbytes
+        return [rel], {rel: entry}
     if single_file and not pcols:
         df = df.repartition(1)
     elif rebalance and not pcols:
@@ -1448,8 +1726,12 @@ def append(
     ``rebalance=True`` is the SCALE-ADAPTIVE variant for unbounded
     payloads (streaming sinks whose batch size is workload-determined):
     an AQE REBALANCE hint sizes output files from the actual shuffle
-    bytes — one file for a kilobyte batch, right-sized parallel files
-    for a large one (see :func:`_write_data_files`).
+    bytes — right-sized parallel files for a large batch; with AQE off
+    (stateful streams) the hint spreads a batch over
+    ``spark.sql.shuffle.partitions`` files. This is always the Spark
+    write; the streaming sink commits small batches as driver-written
+    files through the private :func:`_append` (see
+    :func:`_write_data_files`).
     Parent files keep their recorded stats; new files add theirs. The
     batch's schema is enforced against the table's recorded schema:
     drift raises :class:`SchemaMismatchError` unless ``evolve=True``,
@@ -1478,10 +1760,42 @@ def append(
     partition column: the column is a derived transform value that
     lives only in the ``col=val`` path segments, and readers drop it by
     schema projection — user queries never see or mention it."""
-    spark = df.sparkSession
-    if txn is not None and txn_version(spark, root, txn) is not None:
+    if txn is not None and txn_version(df.sparkSession, root, txn) is not None:
         raise ValueError(f"txn {txn!r} already committed; check txn_version first")
+    return _append(
+        df, root, stats_cols, evolve, txn, partition_by, max_retries,
+        hidden_partition, allow_spec_change, single_file, rebalance,
+    )
+
+
+def _append(
+    df: DataFrame,
+    root: str,
+    stats_cols: list[str] | None = None,
+    evolve: bool = False,
+    txn: str | None = None,
+    partition_by: str | list[str] | None = None,
+    max_retries: int = 3,
+    hidden_partition: bool = False,
+    allow_spec_change: bool = False,
+    single_file: bool = False,
+    rebalance: bool = False,
+    driver: bool = False,
+    skip_empty: bool = False,
+) -> int | None:
+    """:func:`append` without its duplicate-``txn`` guard: write the
+    data files, then run the commit loop. For a caller that already
+    checked the token (the streaming sink scans the retained manifests
+    once per batch, not twice). ``driver`` tries the driver write of
+    :func:`_write_data_files`. ``skip_empty`` returns None and writes
+    and commits nothing when the batch has no rows — told by the driver
+    write's own collect, so it costs no probe job unless the batch takes
+    the Spark write."""
+    spark = df.sparkSession
     pcols = _norm_pcols(partition_by)
+    small = _driver_batch(df) if driver and not pcols else None
+    if skip_empty and (small[0].num_rows == 0 if small is not None else df.isEmpty()):
+        return None
     schema_df = df.drop(*pcols) if hidden_partition and pcols else df
 
     def head(parent: int) -> tuple[dict, bool]:
@@ -1504,9 +1818,8 @@ def append(
     spec = _check_partition_spec(m, partition_by, allow_spec_change)
     schema = _merged_schema(m.get("schema"), _schema_list(schema_df), evolve)
     _enforce_constraints(df, root)
-    files, stats = _write_data_files(
-        df, root, stats_cols, partition_by,
-        single_file=single_file, rebalance=rebalance,
+    files, stats = _write_batch(
+        df, small, root, stats_cols, pcols, True, single_file, rebalance
     )
     last_err: Exception | None = None
     for attempt in range(max(1, max_retries)):
@@ -2231,8 +2544,10 @@ def dv_delete(spark: SparkSession, root: str, pred: str) -> int:
         # position payload must not funnel through one task — AQE sizes
         # the position files from the actual bytes (1 file at small
         # scale, parallel right-sized files for a wide match)
+        # driver write only over the persisted matched frame: an
+        # over-cap prefix job would otherwise re-run the find scan
         dfiles, _ = _write_data_files(
-            dvdf, root, collect_stats=False, rebalance=True
+            dvdf, root, collect_stats=False, rebalance=True, driver=feed_on
         )
         n, targets = _dv_summary(root, dfiles)
         if n == 0:  # no live row matches: nothing to commit (no-op)
@@ -2343,7 +2658,7 @@ def dv_update(
         # the position files from the actual bytes (1 file at small
         # scale, parallel right-sized files for a wide match)
         dfiles, _ = _write_data_files(
-            dvdf, root, collect_stats=False, rebalance=True
+            dvdf, root, collect_stats=False, rebalance=True, driver=True
         )
         n, targets = _dv_summary(root, dfiles)
         if n == 0:
@@ -5228,7 +5543,7 @@ def compact_small(
             # of a rewritten entry is unbounded at scale; the rows are
             # already cached so the sizing shuffle is cheap
             dfiles, _ = _write_data_files(
-                dv, root, collect_stats=False, rebalance=True
+                dv, root, collect_stats=False, rebalance=True, driver=True
             )
             new_dels.append(
                 {

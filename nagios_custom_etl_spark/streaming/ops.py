@@ -412,6 +412,14 @@ def snapshot_append_sink(
     compact self-heals on the next batch. Compaction is best-effort
     maintenance: losing its commit race just defers it.
 
+    Per batch: one Spark job collects a small batch and the driver
+    writes it as ONE file (see :func:`~...snapshots._write_data_files`
+    for the byte cap, the per-row ceiling and the timestamp rule); a
+    batch over the cap goes through Spark's writer after that job —
+    which stands where an emptiness probe would — and the writer's
+    rebalance hint needs AQE: inside a stateful query (AQE off) it
+    writes ``spark.sql.shuffle.partitions`` files per commit.
+
     At 100 TB: per-batch cost is the batch's data files + one O(files)
     manifest write; the store's history is every micro-batch, so
     downstream consumers tail it incrementally (st21/x84) instead of
@@ -426,13 +434,21 @@ def snapshot_append_sink(
         token = f"stream-batch-{batch_id}"
         if S.txn_version(spark, root, token) is not None:
             return  # replayed batch: already committed, exactly-once
-        if batch_df.isEmpty():
+        # The token was just checked, so the private append body skips
+        # append's second scan of every retained manifest. rebalance: a
+        # micro-batch inherits the upstream scan/shuffle partitioning and
+        # would spray kilobyte files per commit (guide §6). A small batch
+        # is collected once and lands as one driver-written file — with
+        # or without AQE, which Spark turns off for stateful queries — and
+        # that collect also tells an empty (trailing no-data) trigger,
+        # which commits nothing, so no emptiness probe job runs. A large
+        # backlog batch takes the Spark write with the rebalance hint, its
+        # collect job standing where the probe stood.
+        v = S._append(
+            batch_df, root, txn=token, rebalance=True, driver=True, skip_empty=True
+        )
+        if v is None:
             return  # trailing no-data trigger: nothing to publish
-        # rebalance: a micro-batch inherits the upstream scan/shuffle
-        # partitioning, spraying kilobyte files per commit (guide §6);
-        # the AQE hint sizes output files from actual batch bytes, so
-        # a large backlog batch still writes in parallel
-        v = S.append(batch_df, root, txn=token, rebalance=True)
         if auto_compact_files is not None:
             m = S._read_manifest(spark, root, v)
             if len(m["files"]) > auto_compact_files:

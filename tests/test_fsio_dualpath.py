@@ -357,3 +357,75 @@ def test_dv_summary_streams_and_never_materializes_full_column(
     count, targets = S._dv_summary(root, ["dv-dir/positions.parquet"])
     assert count == n
     assert targets == sorted(f"data-abc/part-{i:05d}.parquet" for i in range(7))
+
+
+def test_pa_fs_cache_hit_resolves_like_first_call(monkeypatch):
+    """A cache hit must give the fs-native path from_uri would give:
+    abfss keeps its container (the authority's user part), s3 its bucket,
+    hdfs none — percent-decoded, trailing slash dropped. Stubbed
+    filesystem: only the client constructor is replaced."""
+    from urllib.parse import unquote, urlparse
+
+    from pyarrow import fs as pafs
+
+    calls = []
+
+    class StubFileSystem:
+        @staticmethod
+        def from_uri(uri):
+            calls.append(uri)
+            u = urlparse(uri)
+            prefix = {"abfss": u.netloc.split("@")[0], "s3": u.netloc}.get(u.scheme, "")
+            return f"fs:{u.scheme}:{u.netloc}", prefix + unquote(u.path).rstrip("/")
+
+    monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
+    monkeypatch.setattr(fsio, "_PA_FS_CACHE", {})
+    az = "abfss://box@acct.dfs.core.windows.net"
+    for uris in (
+        [f"{az}/t/_snapshots/v1.json", f"{az}/t/data-1/part%200.parquet", f"{az}/t/d/"],
+        ["s3a://bkt/t/v1.json", "s3a://bkt/t/data-2/p.parquet"],
+        ["hdfs://nn:8020/t/v1.json", "hdfs://nn:8020/t/x%3Ay"],
+    ):
+        n = len(calls)
+        got = [fsio._pa_fs(u) for u in uris]
+        assert len(calls) == n + 1  # first call builds the client, the rest hit
+        want = [StubFileSystem.from_uri(u.replace("s3a:", "s3:", 1)) for u in uris]
+        assert got == want, uris
+
+
+@pytest.mark.parametrize("branch", ["hadoop", "pyarrow"])
+def test_write_bytes_every_branch(spark, tmp_path, monkeypatch, branch):
+    """write_bytes lands any bytes-like object byte for byte through the
+    Hadoop branch (bare path, no local fast path) and the pyarrow.fs
+    branch (file:/// URI, Hadoop unreachable)."""
+    import pyarrow as pa
+
+    monkeypatch.setattr(fsio, "_local_path", lambda spark, path: None)
+    base = str(tmp_path / "b")
+    if branch == "pyarrow":
+        def no_hadoop(spark, path):
+            raise AssertionError(f"fell through to Hadoop for {path}")
+
+        monkeypatch.setattr(fsio, "_fs", no_hadoop)
+        base = f"file://{base}"
+    payload = b"\x00PAR1\xff\n"
+    fsio.write_bytes(spark, f"{base}/d/x.bin", pa.py_buffer(payload))
+    fsio.write_bytes(spark, f"{base}/d/y.bin", payload)
+    for name in ("x.bin", "y.bin"):
+        with open(tmp_path / "b" / "d" / name, "rb") as fh:
+            assert fh.read() == payload
+
+
+def test_hadoop_branch_driver_written_append(spark, tmp_path, monkeypatch):
+    """A driver-written data file reaches a destination only Hadoop
+    serves: it goes through fsio.write_bytes like every metadata file."""
+    monkeypatch.setattr(fsio, "_local_path", lambda spark, path: None)
+    root = str(tmp_path / "htab")
+    df = spark.range(0, 20).selectExpr("id i", "concat('v', id) s")
+    assert S._append(df, root, stats_cols=["i"], single_file=True, driver=True) == 1
+    (f,) = S._read_manifest(spark, root, 1)["files"]
+    assert "_SUCCESS" not in fsio.list_names(spark, f"{root}/{f.split('/')[0]}")
+    assert S.metadata_count(spark, root) == 20
+    assert sorted(map(tuple, S.read_snapshot(spark, root).collect())) == sorted(
+        map(tuple, df.collect())
+    )

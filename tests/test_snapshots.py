@@ -5121,3 +5121,392 @@ def test_dv_family_random_model(spark, root, trial, tmp_path):
                 S.metadata_count(spark, sub)
         else:
             assert S.metadata_count(spark, sub) == len(model), op
+
+
+# --- driver-written small commits ---------------------------------------------
+
+
+def _parquet_dirs(root):
+    import os
+
+    return sorted(d for d in os.listdir(root) if d.startswith("data-"))
+
+
+def _group_jobs(spark, tag, fn) -> int:
+    """Run ``fn`` under Spark job group ``tag``; the number of jobs it ran."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(tag, tag)
+        fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_stateful_stream_sink_commits_one_file_per_small_batch(spark, tmp_path):
+    """Spark runs every foreachBatch frame of a STATEFUL query without
+    AQE, so the sink's rebalance hint alone is a round-robin exchange
+    into shuffle.partitions files per commit. A small micro-batch must
+    land as ONE file; the trailing no-data batch commits nothing."""
+    from nagios_custom_etl_spark.streaming import ops
+
+    land, root = tmp_path / "landing", str(tmp_path / "tab")
+    for poll in range(2):  # two ~600-row polls overlapping by 300 rows
+        spark.range(1000 + poll * 300, 1600 + poll * 300).selectExpr(
+            "concat('h', id % 7) host_name", "id t", "cast(id as double) / 2 value"
+        ).repartition(1).write.mode("append").parquet(str(land))
+    raw = (
+        spark.readStream.schema("host_name string, t bigint, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(land))
+    )
+    keyed = raw.withColumn("ts", F.timestamp_seconds("t")).withColumn(
+        "event_id", F.concat_ws("|", "host_name", F.col("t").cast("string"))
+    )
+    with ops.stream_state_partitions(spark, 4):
+        q = (
+            ops.cross_run_dedup(keyed).drop("event_id").writeStream
+            .foreachBatch(ops.snapshot_append_sink(root))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert S.latest_version(spark, root) == 2
+    for v in (1, 2):
+        added = S._read_manifest(spark, root, v)["files"][v - 1 :]
+        assert len(added) == 1, (v, added)
+    assert len(_parquet_dirs(root)) == 2
+    got = S.read_snapshot(spark, root)
+    assert got.count() == 900 and got.select("t").distinct().count() == 900
+
+
+def test_sink_no_data_batch_one_job_per_route_commits_nothing(spark, tmp_path):
+    """A no-data micro-batch (every route filtered empty) runs exactly ONE
+    Spark job per route — the driver write's collect, which stands in for
+    an emptiness probe — commits nothing and leaves no data-* dir."""
+    from nagios_custom_etl_spark.streaming.ops import snapshot_append_sink
+
+    roots = {r: str(tmp_path / f"t{r}") for r in "abcd"}
+    sinks = {r: snapshot_append_sink(root) for r, root in roots.items()}
+    batch = spark.range(0, 400).selectExpr(
+        "cast(id as int) i", "concat('r', id) s", "substr('abcd', cast(id % 4 as int) + 1, 1) route"
+    ).repartition(4).persist()
+    try:
+        batch.count()
+        for r, sink in sinks.items():
+            sink(batch.filter(F.col("route") == r).drop("route"), 0)
+        dirs = {r: _parquet_dirs(root) for r, root in roots.items()}
+        assert all(len(d) == 1 for d in dirs.values()), dirs
+        for r, sink in sinks.items():
+            jobs = _group_jobs(
+                spark, f"no-data-{r}",
+                lambda r=r, sink=sink: sink(batch.filter(F.col("route") == "z").drop("route"), 1),
+            )
+            assert jobs == 1, (r, jobs)
+            assert S.latest_version(spark, roots[r]) == 1
+            assert _parquet_dirs(roots[r]) == dirs[r]
+    finally:
+        batch.unpersist()
+
+
+def test_sink_scans_txn_tokens_once_per_batch(spark, root, monkeypatch):
+    """The sink checks its batch token once; the private append body it
+    commits through must not scan every retained manifest again."""
+    from nagios_custom_etl_spark.streaming.ops import snapshot_append_sink
+
+    calls = []
+    real = S.txn_version
+    monkeypatch.setattr(S, "txn_version", lambda *a: calls.append(a) or real(*a))
+    sink = snapshot_append_sink(root)
+    for b in range(3):
+        sink(_df(spark, b * 3, b * 3 + 3), b)
+    assert len(calls) == 3
+    assert S.latest_version(spark, root) == 3
+    with pytest.raises(ValueError, match="already committed"):
+        S.append(_df(spark, 0, 1), root, txn="stream-batch-1")  # public guard kept
+
+
+def _driver_append(df, root, **kw):
+    """Append through the private body with the driver write on, as the
+    streaming sink does (the public append is always the Spark write)."""
+    return S._append(df, root, driver=True, **kw)
+
+
+def _spark_written_files(spark, root, v=1) -> bool:
+    """Whether every data dir version ``v`` added carries Spark's _SUCCESS."""
+    subs = {f.split("/")[0] for f in S._read_manifest(spark, root, v)["files"]}
+    return all("_SUCCESS" in fsio.list_names(spark, f"{root}/{d}") for d in subs)
+
+
+def _spy_collects(monkeypatch, df):
+    """Record (rows, Arrow bytes) of every toArrow collect."""
+    seen = []
+    real = type(df).toArrow
+
+    def spy(self):
+        t = real(self)
+        seen.append((t.num_rows, t.nbytes))
+        return t
+
+    monkeypatch.setattr(type(df), "toArrow", spy)
+    return seen
+
+
+@pytest.mark.parametrize("with_string", [False, True])
+def test_over_cap_batch_takes_spark_write_with_equal_files_and_stats(
+    spark, tmp_path, monkeypatch, with_string
+):
+    """With the cap at 10 rows' ceiling, a 500-row batch runs the prefix
+    job, sees an 11th row and falls through to the Spark write: every
+    row commits, and its files (one rebalanced file, Spark's _SUCCESS)
+    and stats equal those of the public append, which always writes
+    through Spark. A batch of exactly 10 rows stays on the driver."""
+    cols = ["cast(id as int) i", "id * 3 b"] + (["cast(id as string) s"] if with_string else [])
+    df = spark.range(0, 500).selectExpr(*cols).repartition(3)
+    row = 12 + (4 + S._DRIVER_VAR_ROW_BYTES if with_string else 0)
+    a, b = str(tmp_path / "drv"), str(tmp_path / "spk")
+    with monkeypatch.context() as m:
+        m.setattr(S, "_DRIVER_STATS_MAX_BYTES", 10 * row)
+        seen = _spy_collects(m, df)
+        _driver_append(df, a, stats_cols=["i", "b"], rebalance=True)
+    assert [n for n, _ in seen] == [11]
+    S.append(df, b, stats_cols=["i", "b"], rebalance=True)
+    assert _spark_written_files(spark, a) and _spark_written_files(spark, b)
+    ma, mb = S._read_manifest(spark, a, 1), S._read_manifest(spark, b, 1)
+    assert len(ma["files"]) == len(mb["files"]) == 1
+    sa, sb = (dict(next(iter(m["stats"].values()))) for m in (ma, mb))
+    assert sa.pop("__bytes") > 0 and sb.pop("__bytes") > 0
+    assert sa == sb and sa["__rows"] == 500
+    assert sorted(map(tuple, S.read_snapshot(spark, a).collect())) == sorted(
+        map(tuple, df.collect())
+    )
+    exact, c = spark.range(0, 10).selectExpr(*cols), str(tmp_path / "exact")
+    with monkeypatch.context() as m:  # exactly k rows: still the driver
+        m.setattr(S, "_DRIVER_STATS_MAX_BYTES", 10 * row)
+        _driver_append(exact, c, stats_cols=["i", "b"], rebalance=True)
+    assert not _spark_written_files(spark, c)
+    assert S.read_snapshot(spark, c).count() == 10
+
+
+def test_long_strings_stay_under_cap_and_fall_back(spark, tmp_path, monkeypatch):
+    """The prefix is bounded in bytes, not in estimated rows: 40 rows of
+    3 KB strings are few enough rows for a 64 KB cap but twice its
+    bytes. Each row over the per-row ceiling ships nulled, so the
+    driver collects well under the cap, and the batch falls back to the
+    Spark write with every row committed. One long row among short ones
+    falls back too; all-short rows stay on the driver."""
+    cap = 64 * 1024
+    long_ = spark.range(40).selectExpr("cast(id as int) i", "repeat(cast(id as string), 3000) s")
+    mixed = spark.range(40).selectExpr(
+        "cast(id as int) i", "if(id = 17, repeat('x', 3000), concat('v', id)) s"
+    )
+    short = spark.range(40).selectExpr("cast(id as int) i", "concat('v', id) s")
+    assert cap // (8 + S._DRIVER_VAR_ROW_BYTES) > 40
+    for name, df, spark_path in (("long", long_, True), ("mixed", mixed, True), ("short", short, False)):
+        root = str(tmp_path / name)
+        with monkeypatch.context() as m:
+            m.setattr(S, "_DRIVER_STATS_MAX_BYTES", cap)
+            seen = _spy_collects(m, df)
+            _driver_append(df, root, stats_cols=["i"], rebalance=True)
+        assert len(seen) == 1 and seen[0][0] == 40, name
+        assert seen[0][1] < cap // 4, (name, seen)
+        assert _spark_written_files(spark, root) == spark_path, name
+        assert sorted(map(tuple, S.read_snapshot(spark, root).collect())) == sorted(
+            map(tuple, df.collect())
+        ), name
+
+
+_WIDE_COLS = {
+    "i": "cast(id as int)",
+    "b": "id * 1000000007",
+    "sm": "cast(id as smallint)",
+    "ti": "cast(id as tinyint)",
+    "f": "cast(id / 3 as float)",
+    "d": "case id when 1 then double('NaN') when 2 then double('inf') "
+    "when 3 then double('-inf') when 4 then null else id / 7 end",
+    "str": "case when id = 5 then null else concat('v', id) end",
+    "bo": "id % 2 = 0",
+    "dt": "date_add(date'1999-12-30', cast(id as int))",
+    "ts": "timestamp_seconds(id * 86401)",
+    "tsn": "cast(timestamp_seconds(id * 3601) as timestamp_ntz)",
+    "d10": "cast(id / 7 as decimal(10,2))",
+    "d30": "cast(id * 1e15 / 7 as decimal(30,2))",
+    "arr": "array(id, null, id + 1)",
+    "mp": "map(concat('k', id), cast(id as int))",
+    "st": "named_struct('x', id, 'y', concat('s', id))",
+    "bin": "cast(concat('b', id) as binary)",
+}
+
+
+def test_driver_written_file_matches_spark_written_per_type(
+    spark, tmp_path, monkeypatch
+):
+    """Parity over a planted wide schema, one column type at a time: a
+    driver-written file and a Spark-written file of the same batch have
+    equal footer fingerprints, equal read_snapshot rows and equal stats
+    entries apart from __bytes (numeric columns carry stats; the float
+    ones go through the Spark stats job on both sides)."""
+    base = spark.range(0, 40).selectExpr(
+        "id", *[f"{e} as {c}" for c, e in _WIDE_COLS.items()]
+    ).persist()
+    numeric = {"i", "b", "sm", "ti", "f", "d"}
+    try:
+        for c in _WIDE_COLS:
+            df = base.select("id", c)
+            stats = ["id"] + ([c] if c in numeric else [])
+            a, b = str(tmp_path / f"drv-{c}"), str(tmp_path / f"spk-{c}")
+            _driver_append(df, a, stats_cols=stats, single_file=True)
+            S.append(df, b, stats_cols=stats, single_file=True)
+            fa, fb = (S._read_manifest(spark, r, 1)["files"] for r in (a, b))
+            assert len(fa) == len(fb) == 1, c
+            assert "_SUCCESS" not in fsio.list_names(spark, f"{a}/{fa[0].split('/')[0]}"), c
+            assert S._group_schema_fingerprint(a, fa[0].split("/")[0], fa[0]) == (
+                S._group_schema_fingerprint(b, fb[0].split("/")[0], fb[0])
+            ), c
+            ra, rb = S.read_snapshot(spark, a), S.read_snapshot(spark, b)
+            assert ra.schema == rb.schema, c
+            assert sorted(map(repr, ra.collect())) == sorted(map(repr, rb.collect())), c
+            sa = dict(S._read_manifest(spark, a, 1)["stats"][fa[0]])
+            sb = dict(S._read_manifest(spark, b, 1)["stats"][fb[0]])
+            sa.pop("__bytes"), sb.pop("__bytes")
+            assert json.dumps(sa, sort_keys=True) == json.dumps(sb, sort_keys=True), c
+    finally:
+        base.unpersist()
+
+
+def test_driver_write_refuses_mixed_timestamps_and_udts(spark, tmp_path):
+    """INT96 output would turn a timestamp_ntz into a timestamp, so a
+    schema with both kinds (nested ones too) takes the Spark write, as
+    does a vector UDT; a single timestamp kind stays on the driver."""
+    from pyspark.ml.linalg import Vectors
+
+    ts = "timestamp_seconds(id)"
+    ntz = "cast(timestamp_seconds(id) as timestamp_ntz)"
+    cases = {
+        "both": (f"{ts} a", f"{ntz} b"),
+        "nested": (f"{ts} a", f"array(named_struct('x', {ntz})) b"),
+        "ts_only": (f"{ts} a",),
+        "ntz_only": (f"{ntz} b",),
+    }
+    for name, cols in cases.items():
+        root = str(tmp_path / name)
+        df = spark.range(3).selectExpr(*cols)
+        _driver_append(df, root, single_file=True)
+        (d,) = _parquet_dirs(root)
+        spark_path = "_SUCCESS" in fsio.list_names(spark, f"{root}/{d}")
+        assert spark_path == (name in ("both", "nested")), name
+        assert sorted(map(repr, S.read_snapshot(spark, root).collect())) == sorted(
+            map(repr, df.collect())
+        ), name
+    vec = spark.createDataFrame(
+        [(1, Vectors.dense([1.0, 2.0])), (2, Vectors.sparse(2, [1], [3.0]))], ["k", "v"]
+    )
+    assert S._driver_write_plan(spark, vec.schema) is None
+    root = str(tmp_path / "vec")
+    (f,), _ = S._write_data_files(vec, root, single_file=True, driver=True)
+    assert "_SUCCESS" in fsio.list_names(spark, f"{root}/{f.split('/')[0]}")
+    assert sorted(
+        (r.k, r.v) for r in spark.read.schema(vec.schema).parquet(f"{root}/{f}").collect()
+    ) == sorted((r.k, r.v) for r in vec.collect())
+
+
+def _scan_legs(df) -> int:
+    return df._jdf.queryExecution().analyzed().collectLeaves().size()
+
+
+def test_scan_legs_split_on_fingerprint_and_coalesce_across_writers(
+    spark, tmp_path, monkeypatch
+):
+    """Scan-leg coalescing keys on each write group's physical footer
+    fingerprint: int->bigint-widened and renamed eras plan separate legs,
+    while a driver-written and a Spark-written group of the same frame
+    coalesce into ONE leg — and every coalesced read equals the union of
+    its per-group reads row for row."""
+    def check(root, legs, groups):
+        df = S.read_snapshot(spark, root)
+        assert _scan_legs(df) == legs, root
+        coalesced = sorted(tuple(r) for r in df.collect())
+        with monkeypatch.context() as m:  # one leg per write group
+            m.setattr(S, "_group_schema_fingerprint", lambda root, sub, f: sub)
+            split = S.read_snapshot(spark, root)
+            assert _scan_legs(split) == groups, root
+            assert sorted(tuple(r) for r in split.collect()) == coalesced, root
+        return coalesced
+
+    same = str(tmp_path / "same")
+    batch = spark.range(0, 50).selectExpr("cast(id as int) k", "concat('v', id) v")
+    _driver_append(batch, same, single_file=True)
+    S.append(batch, same, single_file=True)  # Spark-written
+    _driver_append(batch, same, single_file=True)
+    fps = {
+        S._group_schema_fingerprint(same, f.split("/")[0], f)
+        for f in S._read_manifest(spark, same, 3)["files"]
+    }
+    assert len(fps) == 1
+    assert len(check(same, 1, 3)) == 150
+
+    widened = str(tmp_path / "widened")
+    _driver_append(batch, widened, single_file=True)
+    S.append(batch.selectExpr("cast(k as bigint) k", "v"), widened, evolve=True, single_file=True)
+    S.append(batch, widened, single_file=True)  # int era again: joins leg 1
+    assert len(check(widened, 2, 3)) == 150
+
+    renamed = str(tmp_path / "renamed")
+    S.append(batch, renamed, single_file=True)
+    S.rename_column(spark, renamed, "v", "w")
+    S.append(batch.withColumnRenamed("v", "w"), renamed, single_file=True)
+    assert len(check(renamed, 2, 2)) == 100
+
+
+@pytest.mark.parametrize("codec", ["snappy", "zstd", "uncompressed"])
+@pytest.mark.parametrize("ts_type", ["INT96", "TIMESTAMP_MICROS"])
+def test_driver_write_follows_writer_confs(spark, tmp_path, monkeypatch, codec, ts_type):
+    """The driver file follows the session's parquet writer confs as
+    Spark's would: codec (and Spark's file-name infix) and the timestamp
+    encoding; under TIMESTAMP_MICROS both timestamp kinds can share it."""
+    old = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.parquet.compression.codec", "spark.sql.parquet.outputTimestampType")
+    }
+    spark.conf.set("spark.sql.parquet.compression.codec", codec)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", ts_type)
+    try:
+        cols = ["timestamp_seconds(id * 7919) ts", "id k"]
+        if ts_type == "TIMESTAMP_MICROS":
+            cols.append("cast(timestamp_seconds(id) as timestamp_ntz) n")
+        df = spark.range(20).selectExpr(*cols)
+        a, b = str(tmp_path / "drv"), str(tmp_path / "spk")
+        _driver_append(df, a, single_file=True)
+        S.append(df, b, single_file=True)
+        (fa,), (fb,) = (S._read_manifest(spark, r, 1)["files"] for r in (a, b))
+        assert "_SUCCESS" not in fsio.list_names(spark, f"{a}/{fa.split('/')[0]}")
+        assert fa.split("-c000")[1] == fb.split("-c000")[1]
+        assert S._group_schema_fingerprint(a, fa.split("/")[0], fa) == (
+            S._group_schema_fingerprint(b, fb.split("/")[0], fb)
+        )
+        ra, rb = S.read_snapshot(spark, a), S.read_snapshot(spark, b)
+        assert ra.schema == rb.schema
+        assert sorted(ra.collect()) == sorted(rb.collect())
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_zero_row_driver_append_commits_one_schema_file(spark, root):
+    """A zero-row driver-path append (no skip_empty) keeps append's
+    result: a committed version listing ONE zero-row file that carries the
+    batch's schema."""
+    import pyarrow.parquet as pq
+
+    df = spark.range(0).selectExpr("cast(id as int) i", "cast(id as string) s")
+    assert _driver_append(df, root, stats_cols=["i"], single_file=True) == 1
+    (f,) = S._read_manifest(spark, root, 1)["files"]
+    assert "_SUCCESS" not in fsio.list_names(spark, f"{root}/{f.split('/')[0]}")
+    assert pq.read_schema(f"{root}/{f}").names == ["i", "s"]
+    assert S._read_manifest(spark, root, 1)["stats"][f]["__rows"] == 0
+    out = S.read_snapshot(spark, root)
+    assert out.schema.simpleString() == "struct<i:int,s:string>" and out.count() == 0
