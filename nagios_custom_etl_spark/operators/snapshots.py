@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import itertools
 import json
 import operator
 import re
@@ -42,7 +43,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from nagios_custom_etl_spark import fsio
+from nagios_custom_etl_spark import fsio, table_log
+from nagios_custom_etl_spark.table_log import (
+    DELTA_FORMAT as _DELTA_FORMAT,
+    DIFFED_KEYS as _DIFFED_KEYS,
+    apply_delta as _apply_delta,
+    snap_dir as _snap_dir,
+)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -185,22 +192,14 @@ def _merged_schema(
     return out + added
 
 
-def _snap_dir(root: str) -> str:
-    return f"{root}/_snapshots"
-
-
 def _manifest_path(root: str, version: int) -> str:
-    return f"{_snap_dir(root)}/v{version:08d}.json"
+    return f"{_snap_dir(root)}/{table_log.manifest_name(version)}"
 
 
 def _manifest_versions(spark: SparkSession, root: str) -> list[int]:
     """Versions whose manifest file EXISTS (vacuum drops expired ones,
     so this is not a contiguous range)."""
-    return sorted(
-        int(f[1:9])
-        for f in fsio.list_names(spark, _snap_dir(root))
-        if f.startswith("v") and f.endswith(".json")
-    )
+    return table_log.parse_versions(fsio.list_names(spark, _snap_dir(root)))
 
 
 def latest_version(spark: SparkSession, root: str) -> int:
@@ -210,7 +209,8 @@ def latest_version(spark: SparkSession, root: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Delta-log storage (r11 verdict task 2): a version file holds EITHER a
+# Delta-log storage (r11 verdict task 2; the format rules and the replay
+# walk live in table_log.py): a version file holds EITHER a
 # self-contained ("full") manifest — v1, overwrites/compactions whose
 # change set approaches the table size, and every pre-existing table —
 # OR a DELTA record: the files added/removed, the stats/seqs entries
@@ -227,15 +227,31 @@ def latest_version(spark: SparkSession, root: str) -> int:
 # version FILE is still what arbitrates racing writers.
 # ---------------------------------------------------------------------------
 
-_DELTA_FORMAT = "delta-v1"
 _CKPT_EVERY = 16  # bounded reconstruction walk; amortized full writes
-_DIFFED_KEYS = ("files", "stats", "seqs")
 _STATE_CACHE: dict[tuple, dict] = {}  # (root, v, ident) -> IMMUTABLE state
 _STATE_CACHE_MAX = 256
 
 
 def _ckpt_path(root: str, version: int) -> str:
-    return f"{_snap_dir(root)}/ckpt-{version:08d}.json"
+    return f"{_snap_dir(root)}/{table_log.ckpt_name(version)}"
+
+
+class _FsioLog:
+    """The table log handle (see table_log.py) bound to ``fsio``, so the
+    Hadoop fallback serves it; checkpoint and shard bytes parsed are
+    counted in ``_CKPT_BYTES_READ``."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark, self.dir = spark, _snap_dir(root)
+
+    def exists(self, name: str) -> bool:
+        return fsio.exists(self.spark, f"{self.dir}/{name}")
+
+    def read_json(self, name: str) -> dict:
+        txt = fsio.read_text(self.spark, f"{self.dir}/{name}")
+        if name.startswith("ckpt"):
+            _CKPT_BYTES_READ["n"] += len(txt)
+        return json.loads(txt)
 
 
 # --- manifest-list sharding (r12 verdict task 2) -------------------------
@@ -430,10 +446,8 @@ def _build_shards_distributed(
         idx, sub, sstats, sseqs = t
         from pyarrow.fs import FileType
 
-        from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
-
         text, digest, meta = _shard_payload(version, idx, sub, sstats, sseqs)
-        fs, base = _open_fs(sdir)
+        fs, base = fsio._pa_fs(sdir, session_free=True)
         dst = f"{base}/{meta['path']}"
         if fs.get_file_info(dst).type != FileType.NotFound:
             return meta, 0  # content-addressed: identical bytes exist
@@ -472,24 +486,13 @@ def _try_incremental_ckpt(spark: SparkSession, root: str, version: int) -> bool:
     manifest or missing version file in the chain, an inline previous
     checkpoint, a wholesale seqs drop, a shrink below the sharding
     threshold, or any membership-count mismatch after the fold."""
-    chain: list[dict] = []
-    v = version
-    base_idx = None
-    while v >= 1:
-        if v < version and fsio.exists(spark, _ckpt_path(root, v)):
-            base_idx = _read_ckpt_text(spark, _ckpt_path(root, v))
-            break
-        p = _manifest_path(root, v)
-        if not fsio.exists(spark, p):
-            return False
-        raw = json.loads(fsio.read_text(spark, p))
-        if raw.get("format") != _DELTA_FORMAT:
-            return False  # a full manifest in the chain: full write is right
-        chain.append(raw)
-        v -= 1
-    if base_idx is None or base_idx.get("format") != "ckpt-list-v1":
-        return False
-    chain.reverse()
+    log = _FsioLog(spark, root)
+    try:
+        _, base_idx, chain, _ = table_log.walk(log, version)
+    except FileNotFoundError:
+        return False  # a version file in the chain is gone
+    if base_idx.get("format") != table_log.CKPT_LIST_FORMAT:
+        return False  # a full manifest or inline checkpoint: full write is right
     has_seqs = bool(base_idx.get("has_seqs"))
     total = sum(sm["n_files"] for sm in base_idx["shards"])
     fields = dict(base_idx["base"])
@@ -555,7 +558,7 @@ def _try_incremental_ckpt(spark: SparkSession, root: str, version: int) -> bool:
     to_locate = set(touched_prev)
     for sm in base_idx["shards"]:
         if to_locate:
-            sh = _read_ckpt_text(spark, f"{_snap_dir(root)}/{sm['path']}")
+            sh = log.read_json(sm["path"])
             members = sh["files"]
             hit = [f for f in members if f in touched_prev]
             if hit:
@@ -582,8 +585,30 @@ def _try_incremental_ckpt(spark: SparkSession, root: str, version: int) -> bool:
             pool_seqs[f] = add_seqs[f]
     if sum(sm["n_files"] for sm in reused) + len(pool) != total:
         return False  # fold inconsistency: take the exact full write
+    _write_sharded_ckpt(
+        spark, root, version, fields, pool, pool_stats,
+        pool_seqs if has_seqs else None, reused,
+    )
+    return True
+
+
+def _write_sharded_ckpt(
+    spark: SparkSession,
+    root: str,
+    version: int,
+    fields: dict,
+    files: list[str],
+    stats: dict,
+    seqs: dict | None,
+    reused: list[dict] | tuple = (),
+) -> None:
+    """Write ``files`` as new shards after the ``reused`` shard metas,
+    then the manifest-list index — the index create is the atomic
+    publish point. Past ``_DIST_CKPT_MIN_SHARDS`` shards, executor tasks
+    write them (x156): the pure payload makes the result byte-identical
+    to the driver loop."""
     metas = list(reused)
-    ordered = sorted(pool, key=_cluster_key(pool_stats))
+    ordered = sorted(files, key=_cluster_key(stats))
     chunks = [
         ordered[i : i + _SHARD_SIZE]
         for i in range(0, len(ordered), _SHARD_SIZE)
@@ -591,26 +616,21 @@ def _try_incremental_ckpt(spark: SparkSession, root: str, version: int) -> bool:
     if len(chunks) >= _DIST_CKPT_MIN_SHARDS:
         metas.extend(
             _build_shards_distributed(
-                spark, root, version, chunks, pool_stats,
-                pool_seqs if has_seqs else None, len(metas),
+                spark, root, version, chunks, stats, seqs, len(metas)
             )
         )
     else:
         for sub in chunks:
             metas.append(
-                _build_shard(
-                    spark, root, version, len(metas), sub, pool_stats,
-                    pool_seqs if has_seqs else None,
-                )
+                _build_shard(spark, root, version, len(metas), sub, stats, seqs)
             )
     index = {
-        "format": "ckpt-list-v1",
+        "format": table_log.CKPT_LIST_FORMAT,
         "base": {k: v for k, v in fields.items() if k not in _DIFFED_KEYS},
-        "has_seqs": has_seqs,
+        "has_seqs": seqs is not None,
         "shards": metas,
     }
     _write_ckpt_text(spark, _ckpt_path(root, version), json.dumps(index))
-    return True
 
 
 def _write_checkpoint(
@@ -638,61 +658,22 @@ def _write_checkpoint(
     if len(files) < _SHARD_MIN_FILES:
         _write_ckpt_text(spark, cp, json.dumps(state))
         return
-    stats = state.get("stats") or {}
-    seqs = state.get("seqs")
-    ordered = sorted(files, key=_cluster_key(stats))
-    chunks = [
-        ordered[i : i + _SHARD_SIZE]
-        for i in range(0, len(ordered), _SHARD_SIZE)
-    ]
-    if len(chunks) >= _DIST_CKPT_MIN_SHARDS:
-        # big table: executor tasks write the shards (x156) — the pure
-        # payload makes the result byte-identical to the driver loop
-        shards_meta = _build_shards_distributed(
-            spark, root, version, chunks, stats, seqs, 0
-        )
-    else:
-        shards_meta = [
-            _build_shard(spark, root, version, i, sub, stats, seqs)
-            for i, sub in enumerate(chunks)
-        ]
-    index = {
-        "format": "ckpt-list-v1",
-        "base": {k: v for k, v in state.items() if k not in _DIFFED_KEYS},
-        "has_seqs": seqs is not None,
-        "shards": shards_meta,
-    }
-    _write_ckpt_text(spark, cp, json.dumps(index))
+    _write_sharded_ckpt(
+        spark, root, version, state, files, state.get("stats") or {},
+        state.get("seqs"),
+    )
 
 
-def _read_ckpt_text(spark: SparkSession, path: str) -> dict:
-    txt = fsio.read_text(spark, path)
-    _CKPT_BYTES_READ["n"] += len(txt)
-    return json.loads(txt)
-
-
-def _load_ckpt(spark: SparkSession, root: str, version: int) -> dict:
-    """Full logical state from a checkpoint — inline checkpoints load as
-    one JSON, manifest-list checkpoints merge every shard (full
-    reconstruction semantics unchanged; selective shard loading is the
-    pruned planners' job, :func:`_plan_pruned_state`)."""
-    obj = _read_ckpt_text(spark, _ckpt_path(root, version))
-    if obj.get("format") != "ckpt-list-v1":
-        return obj
-    state = dict(obj["base"])
-    files: list[str] = []
-    stats: dict = {}
-    seqs: dict = {}
-    for sm in obj["shards"]:
-        sh = _read_ckpt_text(spark, f"{_snap_dir(root)}/{sm['path']}")
-        files.extend(sh["files"])
-        stats.update(sh.get("stats") or {})
-        seqs.update(sh.get("seqs") or {})
-    state["files"] = sorted(files)
-    state["stats"] = stats
-    if obj.get("has_seqs"):
-        state["seqs"] = seqs
-    return state
+def _ckpt_index(spark: SparkSession, root: str, version: int) -> dict | None:
+    """The manifest-list checkpoint index at ``version``, None when the
+    version has no sharded checkpoint — what the metadata-only
+    aggregates answer from without loading a shard."""
+    log = _FsioLog(spark, root)
+    if log.exists(table_log.ckpt_name(version)):
+        obj = log.read_json(table_log.ckpt_name(version))
+        if obj.get("format") == table_log.CKPT_LIST_FORMAT:
+            return obj
+    return None
 
 
 def _copy_json(o):
@@ -739,26 +720,6 @@ def _make_delta(prev: dict, manifest: dict) -> dict:
     return d
 
 
-def _apply_delta(prev: dict, d: dict) -> dict:
-    state = dict(d["base"])
-    removed = set(d.get("files_removed", ()))
-    state["files"] = sorted(
-        (set(prev["files"]) - removed) | set(d.get("files_added", ()))
-    )
-    stats = dict(prev.get("stats") or {})
-    for f in d.get("stats_del", ()):
-        stats.pop(f, None)
-    stats.update(d.get("stats_set") or {})
-    state["stats"] = stats
-    if "seqs" in d:
-        sq = dict(prev.get("seqs") or {})
-        for f in d["seqs"]["del"]:
-            sq.pop(f, None)
-        sq.update(d["seqs"]["set"])
-        state["seqs"] = sq
-    return state
-
-
 def _file_ident(spark: SparkSession, path: str) -> tuple[int, int]:
     return fsio.stat_mtime_size(spark, path)
 
@@ -766,23 +727,20 @@ def _file_ident(spark: SparkSession, path: str) -> tuple[int, int]:
 def _state(spark: SparkSession, root: str, version: int) -> dict:
     """Reconstructed logical manifest at ``version`` — INTERNAL, shared,
     never hand out without :func:`_copy_json`. Raises like a plain read
-    when the version file is gone (vacuumed)."""
-    p = _manifest_path(root, version)
-    key = (root, version, _file_ident(spark, p))
-    hit = _STATE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cp = _ckpt_path(root, version)
-    if fsio.exists(spark, cp):
-        state = _load_ckpt(spark, root, version)
-    else:
-        raw = json.loads(fsio.read_text(spark, p))
-        if raw.get("format") != _DELTA_FORMAT:
-            state = raw
-        else:
-            state = _apply_delta(_state(spark, root, version - 1), raw)
-    _cache_state(key, state)
-    return state
+    when the version file is gone (vacuumed). The walk down stops at the
+    first version memoized in ``_STATE_CACHE`` (so a warm call reads no
+    manifest at all), and every version it folds is memoized on the way
+    up."""
+    keys: dict[int, tuple] = {}
+
+    def memo(v: int) -> dict | None:
+        keys[v] = (root, v, _file_ident(spark, _manifest_path(root, v)))
+        return _STATE_CACHE.get(keys[v])
+
+    return table_log.replay(
+        _FsioLog(spark, root), version, memo,
+        lambda v, state: _cache_state(keys[v], state),
+    )
 
 
 def _ensure_checkpoint(spark: SparkSession, root: str, version: int) -> None:
@@ -803,22 +761,11 @@ def _manifest_base_field(spark: SparkSession, root: str, version: int, key: str)
     O(versions) scans like txn_version linear in versions, not
     versions x files."""
     raw = json.loads(fsio.read_text(spark, _manifest_path(root, version)))
-    src = raw["base"] if raw.get("format") == _DELTA_FORMAT else raw
-    return src.get(key)
+    return table_log.head_fields(raw).get(key)
 
 
 def _read_manifest(spark: SparkSession, root: str, version: int) -> dict:
     return _copy_json(_state(spark, root, version))
-
-
-def _shard_maybe(ranges: dict, preds: list[tuple]) -> bool:
-    """Can any file in a shard with column envelopes ``ranges`` satisfy
-    the conjunction ``preds``? Missing envelope -> conservative True."""
-    for col, lo, hi in preds:
-        r = ranges.get(col)
-        if r is not None and (r[1] < lo or r[0] > hi):
-            return False
-    return True
 
 
 def _plan_pruned_state(
@@ -840,73 +787,49 @@ def _plan_pruned_state(
     warm processes never regress."""
     p = _manifest_path(root, version)
     key = (root, version, _file_ident(spark, p))
-    hit = _STATE_CACHE.get(key)
-    if hit is not None:
-        m = _copy_json(hit)
-        m["_files_total"] = len(m["files"])
-        return m
-    # walk down to the nearest base (checkpoint or full version file),
-    # collecting the delta records above it
-    chain: list[dict] = []
-    v = version
-    while True:
-        if fsio.exists(spark, _ckpt_path(root, v)):
-            base_obj = _read_ckpt_text(spark, _ckpt_path(root, v))
-            break
-        raw = json.loads(fsio.read_text(spark, _manifest_path(root, v)))
-        if raw.get("format") != _DELTA_FORMAT:
-            base_obj = raw
-            break
-        chain.append(raw)
-        v -= 1
-    chain.reverse()
-    files: dict[str, bool] = {}
-    stats: dict = {}
-    seqs: dict = {}
-    excluded = False
-    if base_obj.get("format") == "ckpt-list-v1":
-        fields = dict(base_obj["base"])
-        has_seqs = bool(base_obj.get("has_seqs"))
-        total = sum(sm["n_files"] for sm in base_obj["shards"])
-        for sm in base_obj["shards"]:
-            if not _shard_maybe(sm.get("ranges") or {}, preds):
-                excluded = True
-                continue  # provably no member can match: skip its bytes
-            sh = _read_ckpt_text(spark, f"{_snap_dir(root)}/{sm['path']}")
-            for f in sh["files"]:
-                files[f] = True
-            stats.update(sh.get("stats") or {})
-            seqs.update(sh.get("seqs") or {})
-        if not excluded:
-            # r13 ADVICE: every shard was loaded — the planner holds the
-            # FULL state, so memoize it under the same key _state() uses
-            # (via the exact _apply_delta fold — candidate-fold guards
-            # differ on degenerate non-member stats/seqs edges) and
-            # subsequent cold-process reads short-circuit with zero IO
-            # instead of re-walking the chain per call.
-            full = dict(fields)
-            full["files"] = sorted(files)
-            full["stats"] = dict(stats)
-            if has_seqs:
-                full["seqs"] = dict(seqs)
-            for d in chain:
-                full = _apply_delta(full, d)
-            _cache_state(key, full)
-            m = _copy_json(full)
-            m["_files_total"] = len(m["files"])
-            return m
-    else:
-        # inline checkpoint or full manifest: all files are candidates —
-        # the base IS the full state, so fold exactly and memoize (r13
-        # ADVICE: repeated cold pruned reads must not re-walk the chain)
-        full = _copy_json(base_obj)
-        full.pop("format", None)
+    full = _STATE_CACHE.get(key)
+    if full is None:
+        log = _FsioLog(spark, root)
+        _, base_obj, chain, _ = table_log.walk(log, version)
+        # a shard envelope is the union of its members' ranges: one the
+        # per-file stats check rules out holds no candidate
+        if base_obj.get("format") == table_log.CKPT_LIST_FORMAT and not all(
+            table_log.stats_check(sm.get("ranges"), preds)
+            for sm in base_obj["shards"]
+        ):
+            return _candidate_fold(log, base_obj, chain, preds)
+        # every file is a candidate (inline checkpoint, full manifest, or
+        # no shard excluded): the planner holds the FULL state anyway, so
+        # fold it exactly and memoize it under _state()'s key (r13
+        # ADVICE) — repeated cold pruned reads then short-circuit with
+        # zero IO instead of re-walking the chain per call
+        full = table_log.load_base(log, base_obj)
         for d in chain:
             full = _apply_delta(full, d)
         _cache_state(key, full)
-        m = _copy_json(full)
-        m["_files_total"] = len(m["files"])
-        return m
+    m = _copy_json(full)
+    m["_files_total"] = len(m["files"])
+    return m
+
+
+def _candidate_fold(log, index: dict, chain: list[dict], preds: list[tuple]) -> dict:
+    """:func:`_plan_pruned_state`'s planning state over a manifest-list
+    base that excludes some shards: only the intersecting shards are
+    read, and the delta chain folds restricted to their candidates."""
+    files: dict[str, bool] = {}
+    stats: dict = {}
+    seqs: dict = {}
+    fields = dict(index["base"])
+    has_seqs = bool(index.get("has_seqs"))
+    total = sum(sm["n_files"] for sm in index["shards"])
+    for sm in index["shards"]:
+        if not table_log.stats_check(sm.get("ranges"), preds):
+            continue  # provably no member can match: skip its bytes
+        sh = log.read_json(sm["path"])
+        for f in sh["files"]:
+            files[f] = True
+        stats.update(sh.get("stats") or {})
+        seqs.update(sh.get("seqs") or {})
     for d in chain:  # the exact _apply_delta fold, restricted to candidates
         fields = dict(d["base"])
         removed = d.get("files_removed", ())
@@ -1021,9 +944,7 @@ def _parent_head(spark: SparkSession, root: str, parent: int) -> tuple[dict, boo
     and is O(commit-touched) bytes, so a writer that only needs the HEAD
     fields never reconstructs the O(files) state (r13 verdict task 2)."""
     raw = json.loads(fsio.read_text(spark, _manifest_path(root, parent)))
-    if raw.get("format") == _DELTA_FORMAT:
-        return dict(raw["base"]), True
-    return {k: v for k, v in raw.items() if k not in _DIFFED_KEYS}, False
+    return table_log.head_fields(raw), raw.get("format") == _DELTA_FORMAT
 
 
 def _commit_delta(
@@ -1201,9 +1122,7 @@ def _single_file_stats(root: str, relpath: str, stats_cols: list[str]) -> dict:
     pyarrow.fs, x156)."""
     import pyarrow.parquet as pq
 
-    from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
-
-    fs, path = _open_fs(f"{root}/{relpath}")
+    fs, path = fsio._pa_fs(f"{root}/{relpath}", session_free=True)
     return _table_stats(pq.read_table(path, columns=stats_cols, filesystem=fs), stats_cols)
 
 
@@ -1693,14 +1612,6 @@ def _check_partition_spec(
 # aborts and surfaces the conflict (Delta aborts these classes too).
 _APPEND_COMMUTES_WITH = frozenset({"append", "merge", "mor-delete", "wap-publish"})
 
-#: schema-only commits (column mapping DDL): identical file set, zero rows
-#: added or removed — incremental readers step over them like a
-#: data_change:false replace (the file-set equality is re-verified at the
-#: step, never assumed)
-_METADATA_ONLY_OPS = frozenset(
-    {"rename-column", "drop-column", "undrop-column", "add-column", "record-ndv"}
-)
-
 
 def append(
     df: DataFrame,
@@ -2148,9 +2059,7 @@ def _group_schema_fingerprint(root: str, sub: str, one_file: str) -> str:
         return hit
     import pyarrow.parquet as pq
 
-    from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
-
-    fs, path = _open_fs(f"{root}/{one_file}")
+    fs, path = fsio._pa_fs(f"{root}/{one_file}", session_free=True)
     fp = str(pq.read_schema(path, filesystem=fs).remove_metadata())
     if len(_GROUP_SCHEMA_MEMO) >= _GROUP_SCHEMA_MEMO_MAX:
         for k in list(_GROUP_SCHEMA_MEMO)[: _GROUP_SCHEMA_MEMO_MAX // 2]:
@@ -2425,11 +2334,9 @@ def _footer_rows(root: str, dfiles: list[str]) -> int:
     part file at all."""
     import pyarrow.parquet as pq
 
-    from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
-
     n = 0
     for f in dfiles:
-        fs, path = _open_fs(f"{root}/{f}")
+        fs, path = fsio._pa_fs(f"{root}/{f}", session_free=True)
         n += pq.read_metadata(path, filesystem=fs).num_rows
     return n
 
@@ -2450,12 +2357,10 @@ def _dv_summary(root: str, dfiles: list[str]) -> tuple[int, list[str]]:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
-
     n = 0
     targets: set[str] = set()
     for f in dfiles:
-        fs, path = _open_fs(f"{root}/{f}")
+        fs, path = fsio._pa_fs(f"{root}/{f}", session_free=True)
         with pq.ParquetFile(path, filesystem=fs) as pf:
             n += pf.metadata.num_rows
             if pf.metadata.num_rows == 0:
@@ -2878,59 +2783,8 @@ def read_snapshot_pruned(
     whole partitions drop at manifest-planning time. At 100 TB this is
     the difference between scheduling the hundreds of files a day-range
     predicate touches and opening every footer in a million-object
-    table."""
-    v = latest_version(spark, root) if version is None else version
-    m = _plan_pruned_state(spark, root, v, [(col, lo, hi)])
-    stats = m.get("stats", {})
-    spec = m.get("partition_spec") or []
-    simple = _schema_types(m.get("schema") or []).get(col)
-
-    def part_value(f: str):
-        """Typed partition value parsed from the file's relative path,
-        None if absent/null-partition (then pruning falls back to
-        stats/conservative). The segment is UNQUOTED before comparing:
-        the caller's [lo, hi] bounds are logical values, and a
-        Hive-escaped segment ('00%3A00%3A00') compared raw would order
-        differently from its logical form ('00:00:00') — a wrong PRUNE,
-        not a conservative keep."""
-        from urllib.parse import unquote
-
-        for seg in f.split("/")[1:-1]:
-            if seg.startswith(f"{col}="):
-                raw = seg[len(col) + 1 :]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    return None
-                raw = unquote(raw)
-                try:
-                    if simple in ("tinyint", "smallint", "int", "bigint"):
-                        return int(raw)
-                    if simple in ("float", "double"):
-                        return float(raw)
-                except ValueError:
-                    return None
-                return raw
-        return None
-
-    def overlaps(f: str) -> bool:
-        s = stats.get(f, {}).get(col)
-        if s and s[0] is not None and s[1] is not None:
-            return not (s[1] < lo or s[0] > hi)
-        if col in spec:
-            v_part = part_value(f)
-            if v_part is not None:
-                return lo <= v_part <= hi
-        return True
-
-    planned = [f for f in m["files"] if overlaps(f)]
-    total = m.get("_files_total", len(m["files"]))
-    if not planned:
-        df = read_snapshot(spark, root, v).limit(0)
-        return df, 0, total
-    return (
-        _live_view(spark, root, m, planned),
-        len(planned),
-        total,
-    )
+    table. The one-predicate call of :func:`read_snapshot_pruned_multi`."""
+    return read_snapshot_pruned_multi(spark, root, [(col, lo, hi)], version)
 
 
 def read_snapshot_pruned_multi(
@@ -2947,10 +2801,11 @@ def read_snapshot_pruned_multi(
     of the clustered space, so a multi-column predicate prunes
     multiplicatively where any single-column sort helps only its lead
     column. Files missing stats for a predicate column are kept
-    (superset guarantee, same contract as :func:`read_snapshot_pruned`
-    — which remains the single-column/partition-path form). Returns
-    (DataFrame, files_planned, files_total); the caller applies the
-    residual predicate."""
+    (superset guarantee); a predicate on a partition column also prunes
+    by the file's ``col=val`` path value, one level per predicate
+    (``table_log.stats_check`` and ``path_check``). Returns (DataFrame,
+    files_planned, files_total); the caller applies the residual
+    predicate."""
     if not preds:
         raise ValueError("no predicates: use read_snapshot for a full scan")
     v = latest_version(spark, root) if version is None else version
@@ -2958,41 +2813,12 @@ def read_snapshot_pruned_multi(
     stats = m.get("stats", {})
     spec = m.get("partition_spec") or []
     types = _schema_types(m.get("schema") or [])
-
-    def part_value(f: str, col: str):
-        from urllib.parse import unquote
-
-        simple = types.get(col)
-        for seg in f.split("/")[1:-1]:
-            if seg.startswith(f"{col}="):
-                raw = seg[len(col) + 1 :]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    return None
-                raw = unquote(raw)  # logical value, not the escaped form
-                try:
-                    if simple in ("tinyint", "smallint", "int", "bigint"):
-                        return int(raw)
-                    if simple in ("float", "double"):
-                        return float(raw)
-                except ValueError:
-                    return None
-                return raw
-        return None
-
-    def overlaps_all(f: str) -> bool:
-        for col, lo, hi in preds:
-            s = stats.get(f, {}).get(col)
-            if s and s[0] is not None and s[1] is not None and (s[1] < lo or s[0] > hi):
-                return False  # one disjoint range kills the file (AND)
-            if col in spec:
-                # partition levels prune via path values — composite
-                # specs prune multiplicatively, one level per predicate
-                pv = part_value(f, col)
-                if pv is not None and not (lo <= pv <= hi):
-                    return False
-        return True
-
-    planned = [f for f in m["files"] if overlaps_all(f)]
+    planned = [
+        f
+        for f in m["files"]
+        if table_log.stats_check(stats.get(f), preds)
+        and table_log.path_check(f, preds, spec, types)
+    ]
     total = m.get("_files_total", len(m["files"]))
     if not planned:
         return read_snapshot(spark, root, v).limit(0), 0, total
@@ -3019,22 +2845,21 @@ def metadata_count(
     # zero shard loads, at any table file count. Any shard predating
     # row stats (rows: null) falls through to the full path, which
     # raises the precise missing-file error.
-    if fsio.exists(spark, _ckpt_path(root, v)):
-        obj = _read_ckpt_text(spark, _ckpt_path(root, v))
-        if obj.get("format") == "ckpt-list-v1":
-            dels = obj["base"].get("deletes") or []
-            if any(not e.get("pos") for e in dels):
-                raise ValueError(
-                    "pending MoR deletes: metadata count would include "
-                    "dead rows — compact() first or count through "
-                    "read_snapshot"
-                )
-            if not dels:
-                rows = [sm.get("rows") for sm in obj["shards"]]
-                if all(r is not None for r in rows):
-                    return sum(int(r) for r in rows)
-            # positional entries: fall through — the full path validates
-            # every target is still live and subtracts exactly
+    obj = _ckpt_index(spark, root, v)
+    if obj is not None:
+        dels = obj["base"].get("deletes") or []
+        if any(not e.get("pos") for e in dels):
+            raise ValueError(
+                "pending MoR deletes: metadata count would include "
+                "dead rows — compact() first or count through "
+                "read_snapshot"
+            )
+        if not dels:
+            rows = [sm.get("rows") for sm in obj["shards"]]
+            if all(r is not None for r in rows):
+                return sum(int(r) for r in rows)
+        # positional entries: fall through — the full path validates
+        # every target is still live and subtracts exactly
     m = _read_manifest(spark, root, v)
     eq_dels = [e for e in m.get("deletes") or [] if not e.get("pos")]
     pos_dels = [e for e in m.get("deletes") or [] if e.get("pos")]
@@ -3088,12 +2913,11 @@ def metadata_minmax(
     # the envelope (pre-stats files, all-NULL files, zero-row files)
     # falls through to the full path, which keeps the per-file skip/
     # refuse semantics exactly.
-    if fsio.exists(spark, _ckpt_path(root, v)):
-        obj = _read_ckpt_text(spark, _ckpt_path(root, v))
-        if obj.get("format") == "ckpt-list-v1" and not obj["base"].get("deletes"):
-            envs = [(sm.get("ranges") or {}).get(col) for sm in obj["shards"]]
-            if envs and all(e is not None for e in envs):
-                return (min(e[0] for e in envs), max(e[1] for e in envs))
+    obj = _ckpt_index(spark, root, v)
+    if obj is not None and not obj["base"].get("deletes"):
+        envs = [(sm.get("ranges") or {}).get(col) for sm in obj["shards"]]
+        if envs and all(e is not None for e in envs):
+            return (min(e[0] for e in envs), max(e[1] for e in envs))
     m = _read_manifest(spark, root, v)
     if m.get("deletes"):
         raise ValueError(
@@ -3132,21 +2956,20 @@ def _metadata_sum_parts(
     # in the index — one small JSON read, zero shard loads, when every
     # shard carries the column (else fall through to the full path and
     # its precise refusals)
-    if fsio.exists(spark, _ckpt_path(root, v)):
-        obj = _read_ckpt_text(spark, _ckpt_path(root, v))
-        if obj.get("format") == "ckpt-list-v1":
-            if obj["base"].get("deletes"):
-                raise ValueError(
-                    "pending MoR deletes: deleted rows still sit in file "
-                    "stats — compact() first or aggregate through "
-                    "read_snapshot"
-                )
-            parts = [(sm.get("sums") or {}).get(col) for sm in obj["shards"]]
-            if parts and all(p is not None for p in parts):
-                return (
-                    sum(int(p[0]) for p in parts),
-                    sum(int(p[1]) for p in parts),
-                )
+    obj = _ckpt_index(spark, root, v)
+    if obj is not None:
+        if obj["base"].get("deletes"):
+            raise ValueError(
+                "pending MoR deletes: deleted rows still sit in file "
+                "stats — compact() first or aggregate through "
+                "read_snapshot"
+            )
+        parts = [(sm.get("sums") or {}).get(col) for sm in obj["shards"]]
+        if parts and all(p is not None for p in parts):
+            return (
+                sum(int(p[0]) for p in parts),
+                sum(int(p[1]) for p in parts),
+            )
     m = _read_manifest(spark, root, v)
     if m.get("deletes"):
         raise ValueError(
@@ -3258,14 +3081,11 @@ def _merge_commit_lazy(
     if lo is not None:
         m = _plan_pruned_state(spark, root, parent, [(prune_on, lo, hi)])
         fstats = m.get("stats", {})
-
-        def can_match(f: str) -> bool:
-            s = fstats.get(f, {}).get(prune_on)
-            if not s or s[0] is None or s[1] is None:
-                return True  # no stats: conservatively rewrite
-            return not (s[1] < lo or s[0] > hi)
-
-        touched = [f for f in m["files"] if can_match(f)]
+        touched = [
+            f
+            for f in m["files"]
+            if table_log.stats_check(fstats.get(f), [(prune_on, lo, hi)])
+        ]
     mview = {"schema": schema, "partition_spec": spec}
     target = None
     if touched:
@@ -3477,16 +3297,15 @@ def merge_commit(
             if prune_on is not None:
                 fstats = m.get("stats", {})
                 lo, hi = source.agg(F.min(prune_on), F.max(prune_on)).first()
-
-                def can_match(f: str) -> bool:
-                    if lo is None:  # all-NULL (or empty) source: no file matches
-                        return False
-                    s = fstats.get(f, {}).get(prune_on)
-                    if not s or s[0] is None or s[1] is None:
-                        return True  # no stats: conservatively rewrite
-                    return not (s[1] < lo or s[0] > hi)
-
-                touched = [f for f in m["files"] if can_match(f)]
+                # an all-NULL (or empty) source matches no file
+                touched = [
+                    f
+                    for f in m["files"]
+                    if lo is not None
+                    and table_log.stats_check(
+                        fstats.get(f), [(prune_on, lo, hi)]
+                    )
+                ]
                 untouched = [f for f in m["files"] if f not in set(touched)]
             src = align(source) if align is not None else source
             if touched:
@@ -3832,7 +3651,7 @@ def vacuum(spark: SparkSession, root: str, keep_last: int = 2) -> list[str]:
         cp = _ckpt_path(root, v)
         if fsio.exists(spark, cp):
             obj = json.loads(fsio.read_text(spark, cp))
-            if obj.get("format") == "ckpt-list-v1":
+            if obj.get("format") == table_log.CKPT_LIST_FORMAT:
                 kept_shards.update(sm["path"] for sm in obj["shards"])
     # sweep: a shard is reclaimable when (a) no retained checkpoint
     # references it AND (b) its name-version is not retained (a
@@ -4304,39 +4123,26 @@ def read_incremental(
     v_to = latest_version(spark, root) if to_version is None else to_version
     if v_to < since_version:
         raise ValueError(f"to_version {v_to} precedes since_version {since_version}")
-    present = set(_manifest_versions(spark, root))
-    prev = (
-        set(_read_manifest(spark, root, since_version)["files"])
-        if since_version
-        else set()
-    )
-    new: list[str] = []
-    for v in range(since_version + 1, v_to + 1):
-        if v not in present:
-            raise ValueError(f"version {v} was vacuumed; append-only chain unprovable")
-        m = _read_manifest(spark, root, v)
-        op = m["op"]
-        # wap-publish is append-family: its file set is by construction
-        # parent's files + the staged batch's files, strictly additive,
-        # so "newer files == newer rows" holds for it exactly as for
-        # plain appends (a WAP-gated pipeline stays change-feed-able)
-        if op in ("append", "wap-publish"):
-            new.extend(f for f in m["files"] if f not in prev)
-        elif skip_compactions and op == "replace" and m.get("data_change") is False:
-            pass  # row-preserving rewrite: contributes no delta
-        elif op in _METADATA_ONLY_OPS and set(m["files"]) == prev:
-            # schema-only commit (rename/drop/undrop/add column): the
-            # file set is IDENTICAL by construction, so it contributes
-            # no rows; the delta below is planned through m_to's schema,
-            # so the consumer sees the post-evolution names — the same
-            # contract as a range spanning an evolve=True append
-            pass
-        else:
-            raise ValueError(
-                f"version {v} is '{op}', not append: incremental read unsound"
-            )
-        prev = set(m["files"])
-    m_to = _read_manifest(spark, root, v_to)
+    # the range rule (table_log.appended_files) is the snapshot_tail
+    # stream's too. wap-publish is append-family: its file set is by
+    # construction parent's files + the staged batch's files, strictly
+    # additive, so a WAP-gated pipeline stays change-feed-able. A
+    # schema-only commit contributes no rows; the delta below is planned
+    # through m_to's schema, so the consumer sees the post-evolution
+    # names — the same contract as a range spanning an evolve=True append
+    prev = set(_state(spark, root, since_version)["files"]) if since_version else set()
+    new = [
+        f
+        for f, _, _ in table_log.appended_files(
+            _FsioLog(spark, root),
+            set(_manifest_versions(spark, root)),
+            since_version,
+            v_to,
+            prev,
+            skip_compactions,
+        )
+    ]
+    m_to = _state(spark, root, v_to)
     if not new:
         return read_snapshot(spark, root, v_to).limit(0)
     return _read_files(spark, root, new, m_to.get("schema"), m_to.get("partition_spec"))
@@ -4976,12 +4782,6 @@ def _merge_transitions(
     return posts.unionByName(pres)
 
 
-#: ops whose feed derives from the manifest file diff — removed files'
-#: rows are deletes, added files' rows are inserts (requires the removed
-#: files to still be on disk: retention >= feed-consumer lag, Delta's
-#: own CDF caveat)
-_CDF_FILE_DIFF_OPS = ("overwrite", "replace-partitions", "fast-forward")
-
 
 def read_changes(
     spark: SparkSession,
@@ -5013,72 +4813,35 @@ def read_changes(
             .withColumn("_change_type", F.lit(None).cast("string"))
             .withColumn("_commit_version", F.lit(None).cast("long"))
         )
-    have = set(_manifest_versions(spark, root))
-    missing = [v for v in range(max(1, since_version), v_end + 1) if v not in have]
-    if missing:
-        raise ValueError(
-            f"versions {missing[:3]}... were vacuumed: the change range is "
-            "not reconstructible"
-        )
-    m_end = _read_manifest(spark, root, v_end)
-    schema_now = m_end.get("schema") or []
-    if since_version > 0:
-        m_prev = _read_manifest(spark, root, since_version)
-        prev, prev_spec = set(m_prev["files"]), m_prev.get("partition_spec")
-    else:
-        prev, prev_spec = set(), None
-
-    def file_leg(files: list[str], spec, ctype: str, v: int) -> DataFrame:
-        df = (
-            _read_files(spark, root, sorted(files), schema_now or None, spec)
-            if schema_now
-            else _read_files(spark, root, sorted(files), None, spec)
-        )
-        return df.withColumn("_change_type", F.lit(ctype)).withColumn(
-            "_commit_version", F.lit(int(v)).cast("long")
-        )
-
+    # the range rule (table_log.changed_files) is the snapshot_changes
+    # stream's too: both refuse on exactly the same versions
+    entries, specs = table_log.changed_files(
+        _FsioLog(spark, root),
+        set(_manifest_versions(spark, root)),
+        since_version,
+        v_end,
+        lambda v: _state(spark, root, v),
+    )
+    schema_now = _state(spark, root, v_end).get("schema") or []
     legs: list[DataFrame] = []
-    for v in range(since_version + 1, v_end + 1):
-        m = _read_manifest(spark, root, v)
-        cur, spec = set(m["files"]), m.get("partition_spec")
-        added, removed = cur - prev, prev - cur
-        op = m.get("op", "")
-        if "change_files" in m:
-            if m["change_files"]:
-                # one commit's change files are one write: schema-uniform
-                raw = spark.read.parquet(
-                    *[f"{root}/{f}" for f in m["change_files"]]
-                )
-                leg = (
-                    _project_to_schema(raw, schema_now, keep=("_change_type",))
-                    if schema_now
-                    else raw
-                )
-                legs.append(
-                    leg.withColumn("_commit_version", F.lit(int(v)).cast("long"))
-                )
-        elif op in _METADATA_ONLY_OPS and cur == prev:
-            pass  # schema-only commit: no rows changed (file-set verified)
-        elif op == "replace" and m.get("data_change") is False:
-            pass  # row-preserving rewrite (compaction/Z-order)
-        elif op in ("append", "wap-publish", "merge") and not removed:
-            # add-only: derived inserts, zero write amplification (a
-            # merge with no matched files is add-only too)
-            if added:
-                legs.append(file_leg(added, spec, "insert", v))
-        elif op in _CDF_FILE_DIFF_OPS or op.startswith("rollback-to-"):
-            if removed:
-                legs.append(file_leg(removed, prev_spec, "delete", v))
-            if added:
-                legs.append(file_leg(added, spec, "insert", v))
+    for (v, ctype), grp in itertools.groupby(entries, key=lambda e: (e[1], e[2])):
+        files = [f for f, _, _ in grp]
+        if ctype is None:
+            # recorded change files: one commit's are one write, so
+            # schema-uniform, and they carry their own _change_type
+            leg = spark.read.parquet(*[f"{root}/{f}" for f in files])
+            if schema_now:
+                leg = _project_to_schema(leg, schema_now, keep=("_change_type",))
         else:
-            raise ValueError(
-                f"version {v} ({op!r}) recorded no change files — committed "
-                "before the change feed was enabled, or a compaction that "
-                "materialized MoR deletes; re-read from a later version"
-            )
-        prev, prev_spec = cur, spec
+            # derived legs read with the spec of the version holding the
+            # files: a delete's files belong to the version before
+            spec = specs[v - 1] if ctype == "delete" else specs[v]
+            leg = _read_files(
+                spark, root, sorted(files), schema_now or None, spec
+            ).withColumn("_change_type", F.lit(ctype))
+        legs.append(
+            leg.withColumn("_commit_version", F.lit(int(v)).cast("long"))
+        )
     if not legs:
         return (
             read_snapshot(spark, root, v_end)

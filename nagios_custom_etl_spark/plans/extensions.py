@@ -12145,7 +12145,7 @@ def x151_shard_lazy_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sk",
         "sk_box",
         F.lit(bool(0 < lazy_bytes < full_bytes)).alias("fewer_bytes"),
-        F.lit(bool(raw.get("format") == "delta-v1")).alias("delta_record"),
+        F.lit(bool(raw.get("format") == S._DELTA_FORMAT)).alias("delta_record"),
         F.lit(bool(0 < n_removed < len(m_full["files"]))).alias("pruned_removed"),
     )
 

@@ -8,21 +8,21 @@ intersect ~10^3 shards × 1024 entries of driver-side ``json.loads``.
 This module's batch DataSource gives every intersecting shard file to
 an executor task: the task parses the shard, applies the per-file
 stats check for the predicate conjunction THERE, and emits only the
-surviving file names (plus a flag for files whose stats were missing,
-so the driver can apply partition-path pruning to exactly those — the
-same "stats decide first, path only when stats are absent" rule the
-single-node planner uses). Driver cost drops to O(index entries +
-matching files returned + delta records above the base) — never
-O(candidate entries parsed).
+surviving file names; the driver then applies the partition-path check
+to the survivors. Driver cost drops to O(index entries + matching files
+returned + delta records above the base) — never O(candidate entries
+parsed).
 
 The plan is provably IDENTICAL to ``_plan_pruned_state``-based
-planning: shard-envelope exclusion happens on the driver from the
-index alone (as before), the executor replays the exact per-file
-check, and the delta-chain overrides (files added/removed/re-statted
-after the checkpoint — O(commits) small records) are applied on the
-driver, which also re-checks any file whose stats a delta changed.
-Tables with pending MoR deletes fall back to the single-node planner
-(their reads need the seqs map anyway).
+planning: the walk to the base is the table log's own
+(``table_log.walk``), shard-envelope exclusion happens on the driver
+from the index alone, the executor and the driver apply the pruned
+readers' per-file rule (``table_log.stats_check`` then
+``table_log.path_check``), and the delta-chain overrides (files
+added/removed/re-statted after the checkpoint — O(commits) small
+records) are applied on the driver, which also re-checks any file whose
+stats a delta changed. Tables with pending MoR deletes fall back to the
+single-node planner (their reads need the seqs map anyway).
 """
 
 from __future__ import annotations
@@ -33,16 +33,18 @@ from dataclasses import dataclass
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from nagios_custom_etl_spark import table_log
+
 
 @dataclass
 class ShardPartition(InputPartition):
-    path: str  # absolute (fs-relative) shard JSON path
+    name: str  # shard JSON file name in the table's log dir
 
 
 class ManifestShardReader(DataSourceReader):
     """One executor task per intersecting shard: parse its JSON, apply
-    the per-file [min, max]-vs-range check for every predicate, emit
-    survivors as Arrow batches of (file, stats_missing)."""
+    the per-file stats check for the predicate conjunction, emit the
+    survivors as Arrow batches of file names."""
 
     def __init__(self, options: dict):
         self.root = options["root"]
@@ -54,49 +56,24 @@ class ManifestShardReader(DataSourceReader):
         self.force = set(json.loads(options.get("force", "[]")))
 
     def partitions(self) -> Sequence[InputPartition]:
-        from nagios_custom_etl_spark.sources.snapshot_tail import _SNAP_DIR
-
-        return [
-            ShardPartition(f"{self.root}/{_SNAP_DIR}/{name}")
-            for name in self.shards
-        ]
+        return [ShardPartition(name) for name in self.shards]
 
     def read(self, partition: ShardPartition) -> Iterator:
         import pyarrow as pa
 
-        from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
-
-        fs, _ = _open_fs(self.root)
-        with fs.open_input_stream(partition.path) as f:
-            shard = json.loads(f.read().decode("utf-8"))
+        shard = table_log.ArrowLog(self.root).read_json(partition.name)
         stats = shard.get("stats") or {}
-        keep: list[str] = []
-        missing: list[bool] = []
-        for fname in shard["files"]:
-            if fname in self.force:
-                keep.append(fname)  # driver re-decides via delta stats
-                missing.append(False)
-                continue
-            s = stats.get(fname) or {}
-            ok, any_missing = True, False
-            for col, lo, hi in self.preds:
-                ent = s.get(col)
-                if ent and ent[0] is not None and ent[1] is not None:
-                    if ent[1] < lo or ent[0] > hi:
-                        ok = False  # one disjoint range kills it (AND)
-                        break
-                else:
-                    any_missing = True  # conservative keep; driver may
-                    # still path-prune it (partition columns)
-            if ok:
-                keep.append(fname)
-                missing.append(any_missing)
+        keep = [
+            f
+            for f in shard["files"]
+            # a force-emitted file is re-decided by the driver through
+            # its delta-carried stats
+            if f in self.force
+            or table_log.stats_check(stats.get(f), self.preds)
+        ]
         yield from pa.Table.from_arrays(
-            [pa.array(keep, pa.string()), pa.array(missing, pa.bool_())],
-            schema=pa.schema(
-                [pa.field("file", pa.string()),
-                 pa.field("stats_missing", pa.bool_())]
-            ),
+            [pa.array(keep, pa.string())],
+            schema=pa.schema([pa.field("file", pa.string())]),
         ).to_batches()
 
 
@@ -105,15 +82,15 @@ class ManifestShardSource(DataSource):
     (table root), ``shards`` (JSON list of shard file names to plan —
     the caller has already excluded non-intersecting envelopes from the
     index), ``preds`` (JSON ``[[col, lo, hi], ...]`` conjunction).
-    Output: ``file string, stats_missing boolean`` — only files that
-    survive the per-file stats check."""
+    Output: ``file string`` — only files that survive the per-file stats
+    check."""
 
     @classmethod
     def name(cls) -> str:
         return "manifest_shards"
 
     def schema(self) -> str:
-        return "file string, stats_missing boolean"
+        return "file string"
 
     def reader(self, schema) -> ManifestShardReader:
         return ManifestShardReader(self.options)
@@ -127,45 +104,20 @@ def plan_files_distributed(
     set identical to :func:`..operators.snapshots._plan_pruned_state` +
     the per-file check by construction. Driver work: one index read,
     the delta records above the base (O(commits)), envelope exclusion,
-    partition-path refinement of stats-missing survivors, and the
-    collected survivor names (O(matching)). Raises ValueError when the
+    the partition-path check of the survivors, and the collected
+    survivor names (O(matching)). Raises ValueError when the
     table shape doesn't qualify (no sharded checkpoint at a base below
     the version, or pending MoR deletes) — callers fall back to the
     single-node planner."""
-    from urllib.parse import unquote
-
-    from pyspark.sql import functions as F
-
-    from nagios_custom_etl_spark import fsio
     from nagios_custom_etl_spark.operators import snapshots as S
 
-    # walk down to the nearest base, collecting delta records (exactly
-    # _plan_pruned_state's walk)
-    chain: list[dict] = []
-    v = version
-    base_idx = None
-    while v >= 1:
-        cp = S._ckpt_path(root, v)
-        if fsio.exists(spark, cp):
-            base_idx = S._read_ckpt_text(spark, cp)
-            break
-        raw = json.loads(fsio.read_text(spark, S._manifest_path(root, v)))
-        if raw.get("format") != S._DELTA_FORMAT:
-            raise ValueError(
-                "distributed planning needs a sharded checkpoint base; "
-                f"version {v} is a full manifest — use read_snapshot_pruned"
-            )
-        chain.append(raw)
-        v -= 1
-    if base_idx is None or base_idx.get("format") != "ckpt-list-v1":
+    _, base_idx, chain, _ = table_log.walk(S._FsioLog(spark, root), version)
+    if base_idx.get("format") != table_log.CKPT_LIST_FORMAT:
         raise ValueError(
-            "distributed planning needs a ckpt-list-v1 (sharded) base — "
-            "use read_snapshot_pruned"
+            "distributed planning needs a sharded checkpoint base "
+            f"({table_log.CKPT_LIST_FORMAT}) — use read_snapshot_pruned"
         )
-    chain.reverse()
-    fields = dict(base_idx["base"])
-    for d in chain:
-        fields = dict(d["base"])
+    fields = chain[-1]["base"] if chain else base_idx["base"]
     if fields.get("deletes"):
         raise ValueError(
             "pending MoR deletes: the read needs the seqs map — use "
@@ -204,7 +156,7 @@ def plan_files_distributed(
     shards = [
         sm["path"]
         for sm in base_idx["shards"]
-        if S._shard_maybe(sm.get("ranges") or {}, preds)
+        if table_log.stats_check(sm.get("ranges"), preds)
     ]
     # executor-side shard parse + per-file check; bounded collect —
     # one row per SURVIVING file (O(matching), the whole point)
@@ -220,69 +172,21 @@ def plan_files_distributed(
         if shards
         else []
     )
-    survivors = {r["file"]: r["stats_missing"] for r in rows}
+    survivors = {r["file"] for r in rows}
     # apply the fold: removed files drop; delta-added files and
     # emitted re-statted MEMBERS re-decide through their new stats
     # (a recheck key the executors did not emit and the chain did not
     # add is an orphan stats entry — never a member, never planned)
-    for f in removed:
-        survivors.pop(f, None)
-
-    def _ok(st: dict | None) -> tuple[bool, bool]:
-        good, miss = True, False
-        for col, lo, hi in preds:
-            ent = (st or {}).get(col)
-            if ent and ent[0] is not None and ent[1] is not None:
-                if ent[1] < lo or ent[0] > hi:
-                    return False, miss
-            else:
-                miss = True
-        return good, miss
-
-    for f, s in recheck.items():
+    survivors -= removed
+    for f, st in recheck.items():
         if f not in added and f not in survivors:
             continue  # orphan stats key or member of an excluded shard
-        ok, miss = _ok(s)
-        if ok:
-            survivors[f] = miss
+        if table_log.stats_check(st, preds):
+            survivors.add(f)
         else:
-            survivors.pop(f, None)
-
-    # partition-path refinement for stats-missing survivors only —
-    # replaying read_snapshot_pruned_multi's "stats first, path when
-    # stats are absent" rule
+            survivors.discard(f)
+    # then the partition-path check, as in read_snapshot_pruned_multi
     spec = fields.get("partition_spec") or []
     types = S._schema_types(fields.get("schema") or [])
-
-    def part_value(f: str, col: str):
-        simple = types.get(col)
-        for seg in f.split("/")[1:-1]:
-            if seg.startswith(f"{col}="):
-                rawv = seg[len(col) + 1 :]
-                if rawv == "__HIVE_DEFAULT_PARTITION__":
-                    return None
-                rawv = unquote(rawv)
-                try:
-                    if simple in ("tinyint", "smallint", "int", "bigint"):
-                        return int(rawv)
-                    if simple in ("float", "double"):
-                        return float(rawv)
-                except ValueError:
-                    return None
-                return rawv
-        return None
-
-    planned = []
-    for f, miss in survivors.items():
-        if miss and spec:
-            drop = False
-            for col, lo, hi in preds:
-                if col in spec:
-                    pv = part_value(f, col)
-                    if pv is not None and not (lo <= pv <= hi):
-                        drop = True
-                        break
-            if drop:
-                continue
-        planned.append(f)
+    planned = [f for f in survivors if table_log.path_check(f, preds, spec, types)]
     return sorted(planned), len(shards), total

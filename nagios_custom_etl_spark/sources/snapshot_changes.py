@@ -25,241 +25,42 @@ Refusal semantics are inherited from ``read_changes`` VERBATIM:
 - vacuumed versions inside the consumed range refuse (the range is not
   reconstructible).
 
-Driver-side metadata IO goes through ``pyarrow.fs`` (the
-DataSourceStreamReader runs in the driver's Python process with no
-SparkSession); executor-side reads use pyarrow parquet and yield Arrow
-RecordBatches, reconciling evolved schemas by the same
-name-first-then-aliases resolution the batch reader uses.
+The range rule is ``table_log.changed_files``, the one ``read_changes``
+applies, so the stream and the batch read refuse on exactly the same
+versions. Planning, bundling and the executor-side Arrow projection are
+``snapshot_tail.LogStreamReader``'s, shared with the tail source.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-from dataclasses import dataclass
+from pyspark.sql.datasource import DataSource
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
-
-from nagios_custom_etl_spark.sources.snapshot_tail import (
-    _METADATA_ONLY_OPS,
-    _SNAP_DIR,
-    _arrow_type,
-    _load_state,
-    _manifest_versions,
-    _open_fs,
-    _read_json,
-)
-
-#: ops whose feed derives from the manifest file diff at read time
-#: (mirror of snapshots._CDF_FILE_DIFF_OPS; rollback-to-<n> matches by
-#: prefix)
-_FILE_DIFF_OPS = ("overwrite", "replace-partitions", "fast-forward")
+from nagios_custom_etl_spark import table_log
+from nagios_custom_etl_spark.sources.snapshot_tail import LogStreamReader
 
 
-#: target bytes per input partition when BUNDLING change files (r15,
-#: guide §2.2/§6): one InputPartition per change file meant one Spark
-#: task + one executor-side Python worker round trip per file — at
-#: fixture scale a micro-batch over 5 commits paid ~37 near-empty tasks.
-#: Files are packed (in feed order) into partitions up to this budget,
-#: so a small batch is ONE task while a 100 TB backlog still fans out
-#: into ~split-sized parallel reads. Overridable per stream via the
-#: ``bundle_bytes`` option.
-_BUNDLE_BYTES = 128 * 1024 * 1024
-
-
-@dataclass
-class ChangeFilePartition(InputPartition):
-    #: bundled (path, commit_version, ctype) triples, in feed order.
-    #: ctype None => a RECORDED change file carrying its own
-    #: _change_type column; else the derived type ('insert' / 'delete')
-    #: to synthesize. Bundling changes only task boundaries — the rows
-    #: and their per-version columns are identical to one-file-per-
-    #: partition planning.
-    files: tuple
-    #: per declared column: (candidate physical names, has_default,
-    #: default) — snapshot_tail's column-mapping resolution, driver-side
-    resolve: tuple = ()
-
-
-class SnapshotChangesStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict, ddl_schema: str):
-        self.root = options["root"]
-        self.start_version = int(options.get("start_version", "0"))
-        self.end_version = (
-            int(options["end_version"]) if "end_version" in options else None
+class SnapshotChangesStreamReader(LogStreamReader):
+    def _entries(self, log, have: set[int], lo: int, hi: int) -> list:
+        entries, _ = table_log.changed_files(
+            log, have, lo, hi, lambda v: table_log.replay(log, v)
         )
-        self.columns = [
-            tuple(c.strip().rsplit(" ", 1)) for c in ddl_schema.split(",")
-        ]
-        self.bundle_bytes = int(
-            options.get("bundle_bytes", str(_BUNDLE_BYTES))
-        )
+        return entries
 
-    def initialOffset(self) -> dict:
-        return {"version": self.start_version}
-
-    def latestOffset(self) -> dict:
-        fs, base = _open_fs(self.root)
-        versions = _manifest_versions(fs, base)
-        latest = versions[-1] if versions else self.start_version
-        if self.end_version is not None:
-            latest = min(latest, self.end_version)
-        return {"version": max(latest, self.start_version)}
-
-    def _resolution(self, manifest: dict) -> tuple:
-        """snapshot_tail's name-first-then-aliases column resolution,
-        against the newest manifest's schema (fullest alias chains)."""
-        schema = manifest.get("schema")
-        out = []
-        for name, _typ in self.columns:
-            cands: tuple = (name,)
-            has_default, default = False, None
-            for e in schema or []:
-                meta = e[2] if len(e) > 2 and isinstance(e[2], dict) else {}
-                chain = (e[0], *meta.get("aliases", ()))
-                if name in chain:
-                    cands = () if meta.get("dropped") else chain
-                    if not meta.get("dropped") and "default" in meta:
-                        has_default, default = True, meta["default"]
-                    break
-            out.append((cands, has_default, default))
-        return tuple(out)
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        lo, hi = int(start["version"]), int(end["version"])
-        if hi <= lo:
-            return []
-        fs, base = _open_fs(self.root)
-        have = set(_manifest_versions(fs, base))
-        missing = [v for v in range(max(1, lo), hi + 1) if v not in have]
-        if missing:
-            raise ValueError(
-                f"snapshot_changes: versions {missing[:3]}... were vacuumed "
-                "— the change range is not reconstructible"
-            )
-        latest = max(have)
-        lraw = _read_json(fs, f"{base}/{_SNAP_DIR}/v{latest:08d}.json")
-        res = self._resolution(
-            lraw["base"] if lraw.get("format") == "delta-v1" else lraw
-        )
-        prev: set[str] = (
-            set(_load_state(fs, base, lo)["files"]) if lo > 0 else set()
-        )
-        entries: list[tuple[str, int, str | None]] = []
-        for v in range(lo + 1, hi + 1):
-            raw = _read_json(fs, f"{base}/{_SNAP_DIR}/v{v:08d}.json")
-            if raw.get("format") == "delta-v1":
-                fields = raw["base"]
-                added = sorted(
-                    f for f in raw.get("files_added", ()) if f not in prev
-                )
-                removed = sorted(
-                    f for f in raw.get("files_removed", ()) if f in prev
-                )
-                cur = (prev - set(raw.get("files_removed", ()))) | set(
-                    raw.get("files_added", ())
-                )
-            else:
-                fields = raw
-                cur = set(raw["files"])
-                added = sorted(cur - prev)
-                removed = sorted(prev - cur)
-            op = fields.get("op", "")
-            if "change_files" in fields:
-                # recorded feed — read as-is; an EMPTY recorded list is a
-                # statement ("no transitions": feed-on compaction, all-
-                # miss delete) and contributes nothing without refusing
-                entries.extend(
-                    (f"{base}/{f}", v, None)
-                    for f in fields["change_files"] or ()
-                )
-            elif op in _METADATA_ONLY_OPS and cur == prev:
-                pass  # schema-only commit: no rows changed
-            elif op == "replace" and fields.get("data_change") is False:
-                pass  # row-preserving rewrite (compaction/Z-order)
-            elif op in ("append", "wap-publish", "merge") and not removed:
-                entries.extend((f"{base}/{f}", v, "insert") for f in added)
-            elif op in _FILE_DIFF_OPS or op.startswith("rollback-to-"):
-                entries.extend((f"{base}/{f}", v, "delete") for f in removed)
-                entries.extend((f"{base}/{f}", v, "insert") for f in added)
-            else:
-                raise ValueError(
-                    f"snapshot_changes: version {v} ({op!r}) recorded no "
-                    "change files — committed before the change feed was "
-                    "enabled, or a compaction that materialized MoR "
-                    "deletes; start the stream from a later version"
-                )
-            prev = cur
-        if not entries:
-            return []
-        # bundle files (in feed order) into byte-budgeted partitions: one
-        # batched stat call, then greedy packing — a small micro-batch is
-        # ONE task instead of one near-empty Python task per file, a big
-        # backlog still fans out at ~split granularity (guide §2.2)
-        infos = fs.get_file_info([p for p, _, _ in entries])
-        parts: list[InputPartition] = []
-        bundle: list[tuple[str, int, str | None]] = []
-        bundled_bytes = 0
-        for e, info in zip(entries, infos):
-            sz = info.size or 0
-            if bundle and bundled_bytes + sz > self.bundle_bytes:
-                parts.append(ChangeFilePartition(tuple(bundle), res))
-                bundle, bundled_bytes = [], 0
-            bundle.append(e)
-            bundled_bytes += sz
-        if bundle:
-            parts.append(ChangeFilePartition(tuple(bundle), res))
-        return parts
-
-    def read(self, partition: ChangeFilePartition) -> Iterator:
+    def _extra(self, table, n: int, version: int, ctype) -> list:
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        fs, _ = _open_fs(self.root)  # executor-side fs re-resolve
-        resolve = partition.resolve or tuple(
-            ((name,), False, None) for name, _ in self.columns
-        )
-        for path, commit_version, ctype in partition.files:
-            table = pq.read_table(path, filesystem=fs)
-            n = table.num_rows
-            arrays, fields = [], []
-            for (name, simple), (cands, has_default, default) in zip(
-                self.columns, resolve
-            ):
-                typ = _arrow_type(simple)
-                src = next(
-                    (c for c in cands if c in table.column_names), None
-                )
-                if src is not None:
-                    arrays.append(
-                        table.column(src).cast(typ).combine_chunks()
-                    )
-                elif has_default:
-                    arrays.append(pa.array([default] * n).cast(typ))
-                else:
-                    arrays.append(pa.nulls(n, typ))
-                fields.append(pa.field(name, typ))
-            if ctype is None:
-                # recorded change file: carries its own transition types
-                arrays.append(
-                    table.column("_change_type")
-                    .cast(pa.string())
-                    .combine_chunks()
-                )
-            else:
-                arrays.append(pa.array([ctype] * n, pa.string()))
-            fields.append(pa.field("_change_type", pa.string()))
-            arrays.append(pa.array([commit_version] * n, pa.int64()))
-            fields.append(pa.field("_commit_version", pa.int64()))
-            yield from pa.Table.from_arrays(
-                arrays, schema=pa.schema(fields)
-            ).to_batches()
-
-    def commit(self, end: dict) -> None:  # checkpoint owns progress
-        pass
+        if ctype is None:
+            # recorded change file: carries its own transition types
+            types = table.column("_change_type").cast(pa.string()).combine_chunks()
+        else:
+            types = pa.array([ctype] * n, pa.string())
+        return [
+            (pa.field("_change_type", pa.string()), types),
+            (
+                pa.field("_commit_version", pa.int64()),
+                pa.array([version] * n, pa.int64()),
+            ),
+        ]
 
 
 class SnapshotChangesSource(DataSource):

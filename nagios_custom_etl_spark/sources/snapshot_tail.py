@@ -9,23 +9,25 @@ reads O(new files) per trigger, never lists data directories, and never
 re-reads old data — which is the only viable way to follow a 100 TB
 table.
 
-Soundness mirrors ``read_incremental``: every version in the consumed
-range must be an append (newer files == newer rows); a non-append commit
-in range fails the batch rather than silently emitting wrong deltas.
+Soundness is ``read_incremental``'s, by the same rule
+(``table_log.appended_files``): every version in the consumed range must
+be an append (newer files == newer rows); a non-append commit in range
+fails the batch rather than silently emitting wrong deltas.
 
-Driver-side metadata IO (manifest list/read) goes through ``pyarrow.fs``
-— the DataSourceStreamReader runs in the driver's Python process with no
-SparkSession, so the Hadoop-FS helper used elsewhere is unavailable;
-pyarrow.fs resolves local paths and ``s3://``-style URIs the same way.
-Executor-side reads use pyarrow parquet and yield Arrow RecordBatches
-(vectorized — never per-row Python), reconciling evolved schemas by
-materializing missing columns as typed nulls, exactly like the batch
-reader's ``_read_files``.
+Driver-side metadata IO (manifest list/read) goes through the table
+log's ``pyarrow.fs`` handle (``table_log.ArrowLog``) — the
+DataSourceStreamReader runs in the driver's Python process with no
+SparkSession, so the fsio/Hadoop route used elsewhere is unavailable;
+``fsio._pa_fs`` resolves local paths and ``s3://``-style URIs the same
+way. Executor-side reads use pyarrow parquet and yield Arrow
+RecordBatches (vectorized — never per-row Python), reconciling evolved
+schemas by materializing missing columns as typed nulls, exactly like
+the batch reader's ``_read_files``. :class:`LogStreamReader` holds all
+of this for both snapshot-log sources (``snapshot_changes`` too).
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
@@ -35,17 +37,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_SNAP_DIR = "_snapshots"
-
-# schema-only commits (column-mapping DDL in operators/snapshots.py):
-# identical file set, zero rows — steppable like data_change:false
-_METADATA_ONLY_OPS = (
-    "rename-column",
-    "drop-column",
-    "undrop-column",
-    "add-column",
-    "record-ndv",
-)
+from nagios_custom_etl_spark import fsio, table_log
 
 # Spark simpleString -> pyarrow type factory, for typed-null backfill of
 # columns an old data file predates (schema evolution, x73)
@@ -75,102 +67,22 @@ def _arrow_type(simple: str):
     return getattr(pa, name)()
 
 
-def _open_fs(root: str):
-    from pyarrow import fs as pafs
-
-    if root.startswith("file:") and not root.startswith("file://"):
-        # Hadoop-accepted single-slash form (file:/x): local by
-        # definition — strip the scheme before choosing LocalFileSystem
-        # (from_uri would reject it, and the literal string is not a
-        # local path)
-        return pafs.LocalFileSystem(), root[5:]
-    if "://" in root:
-        f, path = pafs.FileSystem.from_uri(root)
-        return f, path
-    return pafs.LocalFileSystem(), root
-
-
-def _read_json(fs, path: str) -> dict:
-    with fs.open_input_stream(path) as f:
-        return json.loads(f.read().decode("utf-8"))
-
-
-def _manifest_versions(fs, base: str) -> list[int]:
-    from pyarrow import fs as pafs
-
-    sel = pafs.FileSelector(f"{base}/{_SNAP_DIR}", allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        name = info.base_name
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:9]))
-    return sorted(out)
-
-
-def _fs_exists(fs, path: str) -> bool:
-    from pyarrow import fs as pafs
-
-    return fs.get_file_info(path).type != pafs.FileType.NotFound
-
-
-def _load_state(fs, base: str, version: int) -> dict:
-    """Reconstruct the logical manifest at ``version`` — the pure-python
-    mirror of snapshots._state (the DataSourceStreamReader runs in the
-    driver's Python process with no SparkSession): walk back through
-    delta records to the nearest full version file or ``ckpt-*.json``
-    checkpoint, then fold the deltas forward. Only the fields this
-    source consumes (files/op/schema/data_change) need to be exact."""
-    chain = []
-    v = version
-    while True:
-        cp = f"{base}/{_SNAP_DIR}/ckpt-{v:08d}.json"
-        if _fs_exists(fs, cp):
-            state = _read_json(fs, cp)
-            if state.get("format") == "ckpt-list-v1":
-                # manifest-list checkpoint (r13): merge the shards —
-                # this source diffs FILE SETS version to version, so it
-                # needs the full list, not the stats (which stay in the
-                # shards it also parses; cheap relative to the data IO
-                # the new files it emits will cost)
-                merged = dict(state["base"])
-                files: list = []
-                for sm in state["shards"]:
-                    sh = _read_json(fs, f"{base}/{_SNAP_DIR}/{sm['path']}")
-                    files.extend(sh["files"])
-                merged["files"] = sorted(files)
-                state = merged
-            break
-        m = _read_json(fs, f"{base}/{_SNAP_DIR}/v{v:08d}.json")
-        if m.get("format") != "delta-v1":
-            state = m
-            break
-        chain.append(m)
-        v -= 1
-    for d in reversed(chain):
-        prev_files = set(state["files"])
-        state = dict(d["base"])
-        state["files"] = sorted(
-            (prev_files - set(d.get("files_removed", ())))
-            | set(d.get("files_added", ()))
-        )
-    return state
-
-
-#: target bytes per input partition when BUNDLING new files (r15, guide
-#: §2.2/§6 — the snapshot_changes convention): one InputPartition per
-#: added file meant one Spark task + one executor-side Python worker
-#: round trip per file, near-empty at small commit sizes. Files pack
-#: (in version order) into partitions up to this budget, so a small
-#: micro-batch is one task while a large backlog still fans out at
-#: ~split granularity. Overridable per stream via ``bundle_bytes``.
+#: target bytes per input partition when BUNDLING a micro-batch's files
+#: (r15, guide §2.2/§6): one InputPartition per file meant one Spark task
+#: + one executor-side Python worker round trip per file, near-empty at
+#: small commit sizes. Files pack (in feed order) into partitions up to
+#: this budget, so a small micro-batch is ONE task while a large backlog
+#: still fans out at ~split granularity. Bundling changes only task
+#: boundaries — rows and their provenance columns are identical to
+#: one-file-per-partition planning.
 _BUNDLE_BYTES = 128 * 1024 * 1024
 
 
 @dataclass
-class NewFilePartition(InputPartition):
-    #: bundled (path, commit_version) pairs, in version order. Bundling
-    #: changes only task boundaries — rows and their provenance columns
-    #: are identical to one-file-per-partition planning.
+class LogFilePartition(InputPartition):
+    #: bundled (fs-native path, commit_version) pairs in feed order, with
+    #: the change type appended by snapshot_changes (None for a
+    #: RECORDED change file, which carries its own _change_type)
     files: tuple
     # per declared column, aligned with the reader's column list:
     # (candidate physical names — current name first then the alias
@@ -183,154 +95,94 @@ class NewFilePartition(InputPartition):
     resolve: tuple = ()
 
 
-class SnapshotTailStreamReader(DataSourceStreamReader):
+class LogStreamReader(DataSourceStreamReader):
+    """What the two snapshot-log streaming sources share: offsets are
+    commit versions, the range rules and the replay come from
+    ``table_log`` (through :class:`~..table_log.ArrowLog` — the reader
+    runs in the driver's Python process with no SparkSession), the
+    files of a batch are bundled by bytes, and ``read`` projects each
+    file onto the declared columns through the column-mapping
+    resolution. Subclasses give the range rule (:meth:`_entries`) and
+    the columns appended per file (:meth:`_extra`)."""
+
     def __init__(self, options: dict, ddl_schema: str):
         self.root = options["root"]
+        self.start_version = int(options.get("start_version", "0"))
         self.end_version = (
             int(options["end_version"]) if "end_version" in options else None
         )
-        self.start_version = int(options.get("start_version", "0"))
-        # Delta's skipChangeCommits for auto-compacted bronze: step over
-        # 'replace' versions carrying the compactor's data_change:false
-        # marker. Sound because partitions() already diffs VERSION BY
-        # VERSION — a compaction contributes no new rows by contract,
-        # and later appends diff against ITS file set, so nothing is
-        # double-counted. Consumer-lag contract: vacuum retention must
-        # exceed stream lag or the pre-compaction originals may be
-        # reclaimed before this reader gets to them (Delta documents the
-        # same constraint).
-        self.skip_compactions = (
-            options.get("skip_compactions", "false").lower() == "true"
-        )
-        # [(name, simple_type)] parsed from the declared DDL, with the
-        # trailing provenance column stripped (the reader synthesizes it)
+        # [(name, simple_type)] parsed from the declared DDL
         self.columns = [
             tuple(c.strip().rsplit(" ", 1)) for c in ddl_schema.split(",")
         ]
-        self.bundle_bytes = int(
-            options.get("bundle_bytes", str(_BUNDLE_BYTES))
-        )
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
 
-    def _resolution(self, manifest: dict) -> tuple:
-        """Column-mapping resolution against ``manifest``'s schema
-        (callers pass the LATEST manifest — its alias chains cover every
-        era in range): each declared column maps to its candidate
-        physical names (the matching entry's current name first, then
-        its alias chain — a declared PRE-rename name finds the
-        post-rename entry through the chain and vice versa) plus the
-        entry's declared default for files that omit it entirely.
-        A declared name matching a DROPPED entry's chain yields NO
-        candidates — the physical bytes stay invisible, as in
-        ``_read_files``; an unmatched declared name keeps the plain
-        (name,) fallback — schema-less tables and not-yet-known columns
-        behave exactly as before."""
-        schema = manifest.get("schema")
-        out = []
-        for name, _typ in self.columns:
-            cands: tuple = (name,)
-            has_default, default = False, None
-            for e in schema or []:
-                meta = e[2] if len(e) > 2 and isinstance(e[2], dict) else {}
-                chain = (e[0], *meta.get("aliases", ()))
-                if name in chain:
-                    cands = () if meta.get("dropped") else chain
-                    if not meta.get("dropped") and "default" in meta:
-                        has_default, default = True, meta["default"]
-                    break
-            out.append((cands, has_default, default))
-        return tuple(out)
-
     def latestOffset(self) -> dict:
-        fs, base = _open_fs(self.root)
-        versions = _manifest_versions(fs, base)
+        versions = table_log.ArrowLog(self.root).versions()
         latest = versions[-1] if versions else self.start_version
         if self.end_version is not None:
             latest = min(latest, self.end_version)
         return {"version": max(latest, self.start_version)}
 
+    def _entries(self, log, have: set[int], lo: int, hi: int) -> list:
+        raise NotImplementedError
+
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         lo, hi = int(start["version"]), int(end["version"])
         if hi <= lo:
             return []
-        fs, base = _open_fs(self.root)
-        # alias chains come from the NEWEST manifest available at
-        # planning time (not each adding commit's: a pre-rename manifest
-        # cannot know the post-rename name a stream's DDL may declare).
-        # Non-file fields ride verbatim in a delta's `base`, so no
-        # reconstruction is needed for the schema.
-        latest = _manifest_versions(fs, base)[-1]
-        lraw = _read_json(fs, f"{base}/{_SNAP_DIR}/v{latest:08d}.json")
-        res = self._resolution(
-            lraw["base"] if lraw.get("format") == "delta-v1" else lraw
-        )
-        entries: list[tuple[str, int]] = []
-        prev: set[str] = set(_load_state(fs, base, lo)["files"]) if lo > 0 else set()
-        for v in range(lo + 1, hi + 1):  # versions consumed by THIS batch
-            m = _read_json(fs, f"{base}/{_SNAP_DIR}/v{v:08d}.json")
-            if m.get("format") == "delta-v1":
-                # the delta IS the diff this loop used to compute
-                op = m["base"]["op"]
-                dchange = m["base"].get("data_change")
-                added = [f for f in m.get("files_added", ()) if f not in prev]
-                cur = (prev - set(m.get("files_removed", ()))) | set(
-                    m.get("files_added", ())
-                )
-            else:
-                op, dchange = m["op"], m.get("data_change")
-                cur = set(m["files"])
-                added = sorted(f for f in cur if f not in prev)
-            if op in ("append", "wap-publish"):  # both strictly additive
-                entries.extend((f"{base}/{f}", v) for f in sorted(added))
-            elif self.skip_compactions and op == "replace" and dchange is False:
-                pass  # row-preserving rewrite: no delta (see __init__ note)
-            elif op in _METADATA_ONLY_OPS and cur == prev:
-                # schema-only commit (column mapping DDL): identical file
-                # set by construction, zero rows — each data file is read
-                # under its OWN era's physical names anyway (the declared
-                # DDL backfills typed NULLs for names a file lacks)
-                pass
-            else:
-                raise ValueError(
-                    f"snapshot_tail: version {v} is '{op}', not append — "
-                    "tailing a mutating table is unsound; use snapshot CDC"
-                )
-            prev = cur
+        log = table_log.ArrowLog(self.root)
+        have = log.versions()
+        entries = self._entries(log, set(have), lo, hi)
         if not entries:
             return []
-        # bundle files into byte-budgeted partitions (one batched stat
-        # call + greedy packing in version order — see _BUNDLE_BYTES)
-        infos = fs.get_file_info([p for p, _ in entries])
+        # alias chains come from the NEWEST manifest available at
+        # planning time (not each adding commit's: a pre-rename manifest
+        # cannot know the post-rename name a stream's DDL may declare)
+        schema = table_log.head_fields(
+            log.read_json(table_log.manifest_name(have[-1]))
+        ).get("schema")
+        res = table_log.column_resolution((n for n, _ in self.columns), schema)
+        # fs-native paths through the one resolver (normalizes a branch
+        # member's ../../ on object stores), then one batched stat call
+        # and greedy packing in feed order (see _BUNDLE_BYTES)
+        fs, _ = fsio._pa_fs(self.root, session_free=True)
+        paths = [
+            (fsio._pa_fs(f"{self.root}/{rel}", session_free=True)[1], *rest)
+            for rel, *rest in entries
+        ]
         parts: list[InputPartition] = []
-        bundle: list[tuple[str, int]] = []
+        bundle: list[tuple] = []
         bundled_bytes = 0
-        for e, info in zip(entries, infos):
+        for e, info in zip(paths, fs.get_file_info([p for p, *_ in paths])):
             sz = info.size or 0
-            if bundle and bundled_bytes + sz > self.bundle_bytes:
-                parts.append(NewFilePartition(tuple(bundle), res))
+            if bundle and bundled_bytes + sz > _BUNDLE_BYTES:
+                parts.append(LogFilePartition(tuple(bundle), res))
                 bundle, bundled_bytes = [], 0
             bundle.append(e)
             bundled_bytes += sz
         if bundle:
-            parts.append(NewFilePartition(tuple(bundle), res))
+            parts.append(LogFilePartition(tuple(bundle), res))
         return parts
 
-    def read(self, partition: NewFilePartition) -> Iterator:
+    def _extra(self, table, n: int, version: int, ctype) -> list:
+        raise NotImplementedError
+
+    def read(self, partition) -> Iterator:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        # paths are fs-RELATIVE (FileSystem.from_uri strips the scheme
-        # when resolving s3://-style roots), so the filesystem must be
-        # re-resolved here on the executor — a bare pq.read_table would
-        # try the stripped path against the local FS and fail for any
-        # non-local root.
-        fs, _ = _open_fs(self.root)
+        # paths are fs-native (the scheme is stripped when resolving
+        # s3://-style roots), so the filesystem is re-resolved here on
+        # the executor — a bare pq.read_table would try the stripped
+        # path against the local FS and fail for any non-local root
+        fs, _ = fsio._pa_fs(self.root, session_free=True)
         resolve = partition.resolve or tuple(
             ((name,), False, None) for name, _ in self.columns
         )
-        for path, commit_version in partition.files:
+        for path, commit_version, *ctype in partition.files:
             table = pq.read_table(path, filesystem=fs)
             n = table.num_rows
             arrays, fields = [], []
@@ -352,14 +204,53 @@ class SnapshotTailStreamReader(DataSourceStreamReader):
                 else:  # pre-evolution file: typed-null backfill
                     arrays.append(pa.nulls(n, typ))
                 fields.append(pa.field(name, typ))
-            arrays.append(pa.array([commit_version] * n, pa.int64()))
-            fields.append(pa.field("commit_version", pa.int64()))
+            for field, array in self._extra(
+                table, n, commit_version, ctype[0] if ctype else None
+            ):
+                fields.append(field)
+                arrays.append(array)
             yield from pa.Table.from_arrays(
                 arrays, schema=pa.schema(fields)
             ).to_batches()
 
     def commit(self, end: dict) -> None:  # checkpoint owns progress
         pass
+
+
+class SnapshotTailStreamReader(LogStreamReader):
+    def __init__(self, options: dict, ddl_schema: str):
+        super().__init__(options, ddl_schema)
+        # Delta's skipChangeCommits for auto-compacted bronze: step over
+        # 'replace' versions carrying the compactor's data_change:false
+        # marker. Sound because the range rule diffs VERSION BY VERSION
+        # — a compaction contributes no new rows by contract, and later
+        # appends diff against ITS file set, so nothing is double-
+        # counted. Consumer-lag contract: vacuum retention must exceed
+        # stream lag or the pre-compaction originals may be reclaimed
+        # before this reader gets to them (Delta documents the same
+        # constraint).
+        self.skip_compactions = (
+            options.get("skip_compactions", "false").lower() == "true"
+        )
+
+    def _entries(self, log, have: set[int], lo: int, hi: int) -> list:
+        prev = set(table_log.replay(log, lo)["files"]) if lo > 0 else set()
+        return [
+            (f, v)
+            for f, v, _ in table_log.appended_files(
+                log, have, lo, hi, prev, self.skip_compactions
+            )
+        ]
+
+    def _extra(self, table, n: int, version: int, ctype) -> list:
+        import pyarrow as pa
+
+        return [
+            (
+                pa.field("commit_version", pa.int64()),
+                pa.array([version] * n, pa.int64()),
+            )
+        ]
 
 
 class SnapshotTailSource(DataSource):

@@ -11,7 +11,9 @@ pyarrow companions (optimization round r15):
 - ``_local_path`` URI handling: ``file://host`` remote authority falls
   back to Hadoop instead of silently dropping the host; the
   ``_DEFAULT_FS_LOCAL`` cache is identity-guarded against id() reuse;
-- ``_open_fs`` accepts the Hadoop single-slash ``file:/x`` form;
+- the session-free form of the one pyarrow resolver (``_pa_fs(...,
+  session_free=True)``) accepts bare paths and the Hadoop single-slash
+  ``file:/x`` form;
 - ``_dv_summary`` never materializes the full position column on the
   driver (footer row count + streamed pc.unique — the r14-verdict
   scale-safety fix).
@@ -26,7 +28,6 @@ import pytest
 
 from nagios_custom_etl_spark import fsio
 from nagios_custom_etl_spark.operators import snapshots as S
-from nagios_custom_etl_spark.sources.snapshot_tail import _open_fs
 
 
 @pytest.fixture()
@@ -193,13 +194,14 @@ def test_default_fs_cache_identity_guarded(spark):
         fsio._DEFAULT_FS_LOCAL.pop(id(fake), None)
 
 
-def test_open_fs_single_slash_file_uri(tmp_path):
+def test_pa_fs_session_free_single_slash_file_uri(tmp_path):
     p = tmp_path / "x.json"
     p.write_text("{}")
-    fs, path = _open_fs(f"file:{p}")  # Hadoop single-slash form file:/x
+    # Hadoop single-slash form file:/x
+    fs, path = fsio._pa_fs(f"file:{p}", session_free=True)
     with fs.open_input_stream(path) as fh:
         assert fh.read() == b"{}"
-    fs2, path2 = _open_fs(str(p))
+    fs2, path2 = fsio._pa_fs(str(p), session_free=True)
     with fs2.open_input_stream(path2) as fh:
         assert fh.read() == b"{}"
 
@@ -429,3 +431,94 @@ def test_hadoop_branch_driver_written_append(spark, tmp_path, monkeypatch):
     assert sorted(map(tuple, S.read_snapshot(spark, root).collect())) == sorted(
         map(tuple, df.collect())
     )
+
+
+def test_remote_branch_members_normalize_through_one_client(tmp_path, monkeypatch):
+    """A branch root's members are referenced as ``../../data-*/part-*``.
+    Object-store keys are literal, so the one pyarrow resolver must
+    collapse the ``..`` (keeping the bucket) before the driver-side
+    footer readers open them, and N per-file opens on one remote root
+    must construct ONE client. Stubbed s3 client: a filesystem that maps
+    keys onto a local dir and, like an object store, never resolves a
+    ``..`` segment."""
+    from urllib.parse import urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    local = pafs.LocalFileSystem()
+
+    class LiteralKeys(pafs.FileSystemHandler):
+        def _p(self, path):
+            if ".." in path.split("/"):
+                raise FileNotFoundError(f"no such key: {path}")
+            return f"{tmp_path}/{path}"
+
+        def get_type_name(self):
+            return "literal-keys"
+
+        def equals(self, other):
+            return self is other
+
+        def normalize_path(self, path):
+            return path
+
+        def get_file_info(self, paths):
+            out = []
+            for p in paths:
+                info = local.get_file_info(self._p(p))
+                out.append(pafs.FileInfo(p, info.type, size=info.size))
+            return out
+
+        def open_input_stream(self, path):
+            return local.open_input_stream(self._p(path))
+
+        def open_input_file(self, path):
+            return local.open_input_file(self._p(path))
+
+        def _unused(self, *a, **k):
+            raise NotImplementedError
+
+        get_file_info_selector = create_dir = delete_dir = _unused
+        delete_dir_contents = delete_root_dir_contents = delete_file = _unused
+        move = copy_file = open_output_stream = open_append_stream = _unused
+
+    clients = []
+    real_fs = pafs.FileSystem
+
+    class IsFileSystem(type):  # pyarrow's own isinstance checks still pass
+        def __instancecheck__(cls, obj):
+            return isinstance(obj, real_fs)
+
+    class StubFileSystem(metaclass=IsFileSystem):
+        @staticmethod
+        def from_uri(uri):
+            clients.append(uri)
+            u = urlparse(uri)
+            return pafs.PyFileSystem(LiteralKeys()), u.netloc + u.path
+
+    (tmp_path / "bkt/t/data-x").mkdir(parents=True)
+    (tmp_path / "bkt/t/dv-y").mkdir(parents=True)
+    members = []
+    for i in range(3):
+        pq.write_table(
+            pa.table({"i": pa.array(range(i, i + 4), pa.int64())}),
+            tmp_path / f"bkt/t/data-x/part-{i}.parquet",
+        )
+        members.append(f"../../data-x/part-{i}.parquet")
+    pq.write_table(
+        pa.table({"_dv_file": ["data-x/part-0.parquet"] * 2, "_dv_pos": [0, 1]}),
+        tmp_path / "bkt/t/dv-y/pos.parquet",
+    )
+    monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
+    monkeypatch.setattr(fsio, "_PA_FS_CACHE", {})
+    monkeypatch.setattr(S, "_GROUP_SCHEMA_MEMO", {})
+    root = "s3://bkt/t/_branches/b"
+    assert S._footer_rows(root, members) == 12
+    assert "i: int64" in S._group_schema_fingerprint(root, "../../data-x", members[0])
+    assert S._single_file_stats(root, members[2], ["i"])["i"] == [2, 5]
+    assert S._dv_summary(root, ["../../dv-y/pos.parquet"]) == (
+        2, ["data-x/part-0.parquet"],
+    )
+    assert len(clients) == 1

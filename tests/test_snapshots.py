@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from nagios_custom_etl_spark import fsio
+from nagios_custom_etl_spark import fsio, table_log
 from nagios_custom_etl_spark.operators import snapshots as S
 
 
@@ -359,6 +359,12 @@ def test_delta_log_random_op_sequences_reconstruct(spark, root, trial, monkeypat
         assert _rows(S.read_snapshot(spark, root, v)) == expect, f"v{v}"
         m = S._read_manifest(spark, root, v)
         assert sorted(m["files"]) == m["files"]  # canonical order kept
+        # the session-free (pyarrow-bound) replay the streaming sources
+        # use reconstructs the same state as the fsio-bound one
+        pa_state = table_log.replay(table_log.ArrowLog(root), v)
+        assert [pa_state.get(k) for k in ("files", "stats", "seqs")] == [
+            m.get(k) for k in ("files", "stats", "seqs")
+        ], f"replay v{v}"
         assert S.metadata_count(spark, root, version=v) == len(expect)
         # sharded pruned planner == full plan (same candidates superset
         # contract, same total) at every retained version
@@ -381,6 +387,37 @@ def test_delta_log_random_op_sequences_reconstruct(spark, root, trial, monkeypat
     if expired:
         with pytest.raises(Exception):
             S.read_snapshot(spark, root, expired[0]).collect()
+
+
+def test_state_memo_warm_reads_nothing_cold_walk_reads_each_version(
+    spark, root, monkeypatch
+):
+    """The replay memo rule, counted in version-file reads: a cold walk
+    over k delta records reads k + 1 version files (the deltas and the
+    full base below them), a warm _state reads none, and a walk stops
+    at the first memoized version below it."""
+    S.append(_df(spark, 0, 40).repartition(4), root)  # v1: full, 4 files
+    for lo in range(40, 46, 2):
+        S.append(_df(spark, lo, lo + 2).coalesce(1), root)  # v2..v4: deltas
+    for v in (2, 3, 4):
+        raw = json.loads(fsio.read_text(spark, S._manifest_path(root, v)))
+        assert raw["format"] == S._DELTA_FORMAT
+    reads: list[str] = []
+    real = fsio.read_text
+    monkeypatch.setattr(
+        fsio, "read_text", lambda sp, path: reads.append(path) or real(sp, path)
+    )
+    S._STATE_CACHE.clear()
+    assert len(S._state(spark, root, 4)["files"]) == 7
+    assert len(reads) == 3 + 1
+    reads.clear()
+    S._state(spark, root, 4)
+    assert reads == []
+    S._STATE_CACHE.clear()
+    S._state(spark, root, 2)
+    reads.clear()
+    S._state(spark, root, 4)  # stops at the memoized v2
+    assert reads == [S._manifest_path(root, 4), S._manifest_path(root, 3)]
 
 
 def test_repeated_vacuum_after_new_commits_is_safe(spark, root):
@@ -500,11 +537,10 @@ def test_sharded_checkpoint_pruned_read_parses_fewer_bytes(
         )
     ]
     assert planned == len(expect)
-    # the pure-python snapshot_tail mirror merges shards identically
-    from nagios_custom_etl_spark.sources import snapshot_tail as T
+    # the session-free (pyarrow-bound) replay merges shards identically
+    from nagios_custom_etl_spark import table_log
 
-    tfs, tbase = T._open_fs(root)
-    assert T._load_state(tfs, tbase, 2)["files"] == S._read_manifest(
+    assert table_log.replay(table_log.ArrowLog(root), 2)["files"] == S._read_manifest(
         spark, root, 2
     )["files"]
     # vacuum: shard liveness is BY REFERENCE (r13 incremental
@@ -1527,6 +1563,67 @@ def test_partition_pruned_read_drops_whole_partitions(spark, root):
     # unpartitioned column without stats: conservative full plan
     _, planned_i, total_i = S.read_snapshot_pruned(spark, root, "i", 0, 1)
     assert planned_i == total_i
+
+
+@pytest.mark.parametrize("part_stats", [False, True])
+def test_pruned_read_plans_the_single_predicate_rule(
+    spark, root, monkeypatch, part_stats
+):
+    """read_snapshot_pruned is the one-predicate call of
+    read_snapshot_pruned_multi (stats check AND partition-path check).
+    On a valid partitioned table it plans exactly the files the former
+    single-predicate rule planned (stats decide when present, the path
+    value only when they are absent) — with and without stats on the
+    partition column."""
+    df = spark.createDataFrame(
+        [Row(i=i, p=i % 4) for i in range(40)], "i int, p int"
+    )
+    S.overwrite(df.repartition(2), root, partition_by="p", stats_cols=["i"])
+    v = S.append(
+        spark.createDataFrame([Row(i=100, p=5)], "i int, p int"),
+        root, partition_by="p", stats_cols=["i"],
+    )
+    m = S._read_manifest(spark, root, v)
+    assert all("p=" in f for f in m["files"])
+    if part_stats:
+        # the writer records no stats for a partition column (its values
+        # live in the path, not the file); record them as a valid table
+        # would hold them — every row of a file has its path's value
+        for f in m["files"]:
+            pv = int(next(x for x in f.split("/") if x.startswith("p="))[2:])
+            m["stats"][f]["p"] = [pv, pv]
+        v = S._commit(
+            spark, root, m["files"], "record-ndv", v, stats=m["stats"],
+            schema=m["schema"], partition_spec=m["partition_spec"],
+        )
+        m = S._read_manifest(spark, root, v)
+    planned: list = []
+    real = S._live_view
+
+    def live_view(sp, r, m, files, **kw):
+        planned.append(sorted(files))
+        return real(sp, r, m, files, **kw)
+
+    monkeypatch.setattr(S, "_live_view", live_view)
+
+    def former_rule(col, lo, hi):
+        def keep(f):
+            s = m["stats"].get(f, {}).get(col)
+            if s and s[0] is not None and s[1] is not None:
+                return not (s[1] < lo or s[0] > hi)
+            seg = next((x for x in f.split("/")[1:-1] if x.startswith(f"{col}=")), None)
+            return seg is None or lo <= int(seg[len(col) + 1 :]) <= hi
+
+        return sorted(f for f in m["files"] if keep(f))
+
+    ranges = [("p", 1, 2), ("p", 5, 9), ("p", 7, 9), ("i", 0, 3), ("i", 90, 200)]
+    for col, lo, hi in ranges:
+        planned.clear()
+        _, n, total = S.read_snapshot_pruned(spark, root, col, lo, hi, version=v)
+        want = former_rule(col, lo, hi)
+        assert total == len(m["files"])
+        # an empty plan reads the whole version with limit(0)
+        assert (planned[0] if n else []) == want, (col, lo, hi)
 
 
 def test_partitioned_merge_commit_keeps_layout(spark, root):
