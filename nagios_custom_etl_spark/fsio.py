@@ -61,7 +61,7 @@ import posixpath
 import re
 import shutil
 import uuid
-from urllib.parse import unquote, urlsplit, urlunsplit
+from urllib.parse import quote, urlsplit, urlunsplit
 
 from py4j.protocol import Py4JJavaError
 
@@ -142,11 +142,15 @@ def _pa_fs(path: str, session_free: bool = False):
     A remote path is normalized (``.``, ``..``, doubled and trailing
     slashes) with its authority kept: object-store keys are literal, so
     a branch member referenced as ``../../data-*/part-*`` must collapse
-    here (local paths stay as given; the OS resolves ``..``). One client
-    is built per (scheme, authority); a cache hit maps the path under
-    the fs-native prefix the first ``from_uri`` returned ("bucket" on
-    s3/gs, "container" on abfss, "" on hdfs), exactly as that call
-    would have."""
+    here (local paths stay as given; the OS resolves ``..``). A ``%``
+    in a remote path is literal too, as Hadoop's ``Path(String)`` reads
+    it: Spark writes a Hive-escaped partition segment
+    (``hh=00%3A00%3A00``) as that very key, so the path is quoted before
+    ``from_uri``, which percent-decodes. One client is built per
+    (scheme, authority); a cache hit maps the path under the fs-native
+    prefix the first ``from_uri`` returned ("bucket" on s3/gs,
+    "container" on abfss, "" on hdfs), exactly as that call would
+    have."""
     is_file = path.startswith("file:")
     if is_file or not _SCHEME_RE.match(path):
         # a bare path under a session is defaultFS territory (Hadoop),
@@ -166,7 +170,7 @@ def _pa_fs(path: str, session_free: bool = False):
     scheme = _PA_SCHEME_ALIASES.get(parts.scheme, parts.scheme)
     norm = posixpath.normpath(parts.path) if parts.path else ""
     key = (scheme, parts.netloc)
-    tail = unquote(norm).rstrip("/")
+    tail = norm.rstrip("/")
     hit = _PA_FS_CACHE.get(key) if tail else None
     if hit is not None:
         fs, prefix = hit
@@ -175,7 +179,7 @@ def _pa_fs(path: str, session_free: bool = False):
         from pyarrow import fs as pafs
 
         fs, p = pafs.FileSystem.from_uri(
-            urlunsplit((scheme, parts.netloc, norm, parts.query, parts.fragment))
+            urlunsplit((scheme, parts.netloc, quote(norm), parts.query, parts.fragment))
         )
     except Exception:  # noqa: BLE001 — scheme pyarrow can't serve
         if session_free:

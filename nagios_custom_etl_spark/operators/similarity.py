@@ -765,7 +765,7 @@ def _assigned_d2(vec_col: str, centroids: list) -> "F.Column":
 def _drift_stats(data: DataFrame, vec_col: str | None, centroids: list) -> dict:
     """Per-cell counts (+ per-cell and corpus mean assigned-centroid
     residual when vectors are stored) in ONE bounded aggregate — n_cells
-    output rows, manifest-sized metadata like _file_stats. ``cell_d2``
+    output rows, manifest-sized metadata like the per-file stats. ``cell_d2``
     (recorded since the per-cell retrain landed) is what lets
     :func:`ann_cell_drift` rank individual cells and
     :func:`ann_retrain_cells` update the baseline for ONLY the cells it

@@ -35,6 +35,7 @@ import functools
 import hashlib
 import itertools
 import json
+import math
 import operator
 import re
 import time
@@ -1019,124 +1020,36 @@ def _commit_delta(
     return version
 
 
-def _file_stats(
-    spark: SparkSession,
-    root: str,
-    sub: str,
-    files: list[str],
-    stats_cols: list[str],
-    schema=None,
-) -> dict:
-    """Per-file min/max for ``stats_cols`` PLUS the per-file row count
-    (reserved key ``__rows`` — always recorded, the basis of
-    metadata-only aggregates, :func:`metadata_count`) in ONE distributed
-    aggregate over the just-written files (grouped on input_file_name —
-    a map-side-combinable pass over only the stat columns). The LEAF
-    files are read directly, never the directory: a directory read runs
-    partition-value type inference on ``col=val`` segments, and Spark 4
-    infers escaped time-like values ('00%3A00%3A00') as the unsupported
-    TIME type — stats must not depend on what the partition values look
-    like. Returned keyed by manifest-relative path (which may include
-    ``col=val`` partition segments — basenames alone collide across
-    partition dirs). Numeric columns only: the values live in JSON
-    manifests and must compare exactly after a round trip.
-
-    INTEGER stats columns additionally record per-file ``__sum_<c>``
-    (exact, decimal(38,0)-carried — Python ints round-trip JSON at
-    arbitrary precision) and ``__nulls_<c>`` — the basis of
-    metadata-only SUM/AVG (:func:`metadata_sum`). Integer-only by the
-    HUGEINT-rule discipline: a float sum depends on reduction order and
-    would not equal a recompute bit-for-bit, so it is never recorded.
-
-    ``schema`` (the just-written leaf schema, known to the writer)
-    skips parquet footer inference at read-planning time — one fewer
-    driver-side footer pass per write (r14 optimization)."""
-    from pyspark.sql import functions as F
-
-    rd = spark.read if schema is None else spark.read.schema(schema)
-    df = rd.parquet(*[f"{root}/{f}" for f in files])
-    aggs, int_cols = _stats_aggs(dict(df.dtypes), stats_cols)
-    rows = (
-        df.groupBy(F.input_file_name().alias("_f"))
-        .agg(*aggs)
-        .collect()  # bounded: one row per written file (manifest metadata)
-    )
-
-    def rel(full: str) -> str:
-        # input_file_name() returns the URI form: an on-disk Hive-escaped
-        # segment ('hh=00%3A00%3A00') comes back DOUBLE-encoded
-        # ('%253A'). One unquote recovers the on-disk name the manifest
-        # lists; without it the real files' stats landed under phantom
-        # keys and the listed files got the zero-row fallback — a silent
-        # metadata UNDERCOUNT on escaped partition values (found by the
-        # partitions_report test, r11).
-        from urllib.parse import unquote
-
-        full = unquote(full)
-        return full[full.index(f"/{sub}/") + 1 :]
-
-    return {rel(r["_f"]): _stats_entry(r, stats_cols, int_cols) for r in rows}
-
-
-def _stats_aggs(dtypes: dict, stats_cols: list[str]) -> tuple[list, list[str]]:
-    """The per-file stats aggregate expressions (row count, min/max per
-    stats col, exact decimal sum + null count per INTEGER stats col) —
-    factored from :func:`_file_stats`."""
-    from pyspark.sql import functions as F
-
-    int_cols = [
-        c
-        for c in stats_cols
-        if dtypes.get(c) in ("tinyint", "smallint", "int", "bigint")
-    ]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
-    for c in int_cols:
-        aggs += [
-            F.sum(F.col(c).cast("decimal(38,0)")).alias(f"_sum_{c}"),
-            F.sum(F.isnull(c).cast("long")).alias(f"_nulls_{c}"),
-        ]
-    return aggs, int_cols
-
-
-def _stats_entry(r, stats_cols: list[str], int_cols: list[str]) -> dict:
-    """One manifest stats entry from a collect()ed aggregate group row —
-    the exact JSON shape every reader expects."""
-    return {
-        "__rows": int(r["__rows"]),
-        **{c: [r[f"_min_{c}"], r[f"_max_{c}"]] for c in stats_cols},
-        **{
-            f"__sum_{c}": (
-                int(r[f"_sum_{c}"]) if r[f"_sum_{c}"] is not None else None
-            )
-            for c in int_cols
-        },
-        **{f"__nulls_{c}": int(r[f"_nulls_{c}"]) for c in int_cols},
-    }
-
-
 def _single_file_stats(root: str, relpath: str, stats_cols: list[str]) -> dict:
-    """Stats entry for ONE just-written file: a bounded driver read of
-    its stats columns through :func:`_table_stats` (scheme-portable via
-    pyarrow.fs, x156)."""
+    """Stats entry for ONE just-written file through :func:`_table_stats`:
+    a read of only its stats columns, or of only its footer when there
+    are none (scheme-portable via pyarrow.fs, x156). Runs on the driver
+    for a small write and inside an executor task for a large one
+    (:func:`_listed_stats`)."""
     import pyarrow.parquet as pq
 
     fs, path = fsio._pa_fs(f"{root}/{relpath}", session_free=True)
+    if not stats_cols:
+        return {"__rows": pq.read_metadata(path, filesystem=fs).num_rows}
     return _table_stats(pq.read_table(path, columns=stats_cols, filesystem=fs), stats_cols)
 
 
 def _table_stats(t, stats_cols: list[str]) -> dict:
-    """The driver-side stats kernel: the manifest stats entry of one
-    file's rows, held as a pyarrow table, instead of a read-back Spark
-    job. Called on a just-written small file (:func:`_single_file_stats`)
-    and on the in-memory table a driver write lands (:func:`_write_batch`).
-    Legal only for INTEGER stats columns, where every aggregate is exact
-    by construction: min/max skip nulls exactly like ``F.min``/``F.max``,
-    the sum is carried in decimal128(38,0) — the same arbitrary-
-    precision lattice the Spark path uses — and the null count is the
-    column's. Float columns take the Spark job (NaN ordering differs
-    between engines)."""
+    """The stats kernel: the manifest stats entry of one file's rows,
+    held as a pyarrow table — the only code that builds one. Every entry
+    records ``__rows`` (the basis of metadata-only COUNT,
+    :func:`metadata_count`) and ``[min, max]`` per stats column, nulls
+    skipped as ``F.min``/``F.max`` skip them (``[None, None]`` when every
+    value is null). INTEGER columns also record the exact ``__sum_<c>``
+    (carried in decimal128(38,0), a Python int in the JSON) and
+    ``__nulls_<c>``, the basis of metadata-only SUM/AVG
+    (:func:`metadata_sum`); a float sum depends on reduction order and is
+    never recorded (the HUGEINT-rule discipline). Floats follow Spark's
+    order, where NaN is greater than every other value: the max is NaN
+    when any value is, the min only when every non-null value is
+    (pyarrow's ``min_max`` skips NaN, and on an all-NaN column returns
+    the inverted ``[inf, -inf]``, which a pruning check would read as
+    "matches nothing")."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1145,27 +1058,32 @@ def _table_stats(t, stats_cols: list[str]) -> dict:
         return entry
     for c in stats_cols:
         col = t.column(c)
-        if col.null_count == len(col):
+        n = len(col) - col.null_count
+        if n == 0:
             entry[c] = [None, None]
-            entry[f"__sum_{c}"] = None
         else:
             mm = pc.min_max(col)
-            entry[c] = [mm["min"].as_py(), mm["max"].as_py()]
-            entry[f"__sum_{c}"] = int(
-                pc.sum(pc.cast(col, pa.decimal128(38, 0))).as_py()
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
+            if pa.types.is_floating(col.type):
+                nans = pc.sum(pc.is_nan(col)).as_py() or 0
+                if nans == n:
+                    lo = hi = math.nan
+                elif nans:
+                    hi = math.nan
+            entry[c] = [lo, hi]
+        if pa.types.is_integer(col.type):
+            entry[f"__sum_{c}"] = (
+                int(pc.sum(pc.cast(col, pa.decimal128(38, 0))).as_py()) if n else None
             )
-        entry[f"__nulls_{c}"] = int(col.null_count)
+            entry[f"__nulls_{c}"] = col.null_count
     return entry
 
 
-_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
-
 #: ceiling for the DRIVER passes of a write: the Arrow bytes a small
 #: batch may be collected into for a driver-written file, and the listed
-#: bytes of a Spark-written write whose stats are read back on the
-#: driver via pyarrow instead of a distributed job. Writes above it —
-#: the actual at-scale case — take the Spark write and the Spark stats
-#: job.
+#: bytes of a Spark-written write whose files are read back for stats
+#: on the driver. Writes above it — the actual at-scale case — take the
+#: Spark write, and one Spark job's tasks read their files back.
 _DRIVER_STATS_MAX_BYTES = 16 * 1024 * 1024
 
 
@@ -1403,18 +1321,25 @@ def _write_data_files(
     order); the partition values are recoverable from each file's
     relative path, so manifests need no extra field.
 
+    Every per-file stats entry comes from one kernel,
+    :func:`_table_stats` (``__rows``, min/max per stats column, exact
+    sums and null counts for integer columns, ``__bytes`` added here).
+    A driver-written file takes it from the in-memory table; a
+    Spark-written write reads its listed files back on the driver when
+    their bytes fit :data:`_DRIVER_STATS_MAX_BYTES`, else in one Spark
+    job with a task per file.
+
     ``collect_stats=False`` skips the stats read-back entirely and
     returns ``(files, {})`` — for AUXILIARY files that never enter a
     manifest's ``stats`` map (MoR equality-delete key files, DV
     position files): their callers discarded the dict anyway, so the
-    per-write stats Spark job was pure overhead (guide §1.2: don't
-    compute things you throw away — one whole job per mor_delete/
-    dv_delete removed).
+    stats read was pure overhead (guide §1.2: don't compute things you
+    throw away).
 
     ``single_file=True`` lands the batch as ONE right-sized output file
     — guide §6: a kilobyte-scale batch sprayed over 32 shuffle
     partitions is the small-files anti-pattern — which also makes the
-    stats read-back a single-task, single-footer job. repartition(1),
+    stats read-back a single-file read. repartition(1),
     NOT coalesce(1): coalesce collapses the whole upstream computation
     (scan, joins) into the single write task — measured 28% SLOWER on
     dv_delete, whose upstream is a pruned find scan; the exchange moves
@@ -1489,14 +1414,7 @@ def _write_batch(
         rel, nbytes = _write_table_file(spark, t, df.schema, root, sub, opts)
         if not collect_stats:
             return [rel], {}
-        cols = stats_cols or []
-        dtypes = dict(df.dtypes)
-        if all(dtypes.get(c) in _INT_TYPES for c in cols):
-            entry = _table_stats(t, cols)
-        else:  # float stats columns: the Spark stats job
-            entry = _file_stats(spark, root, sub, [rel], cols, schema=df.schema).get(
-                rel, {"__rows": 0}
-            )
+        entry = _table_stats(t, stats_cols or [])
         entry["__bytes"] = nbytes
         return [rel], {rel: entry}
     if single_file and not pcols:
@@ -1524,57 +1442,34 @@ def _write_batch(
     # (r9 ADVICE).
     if pcols and stats_cols:
         stats_cols = [c for c in stats_cols if c not in pcols]
-    # Driver-side pyarrow stats for SMALL writes (r15, generalizing the
-    # r14 single-file path): the listing already carries every part
-    # file's byte length, so when the whole write is provably small
-    # (<= _DRIVER_STATS_MAX_BYTES) and every stats column is integer
-    # (exactness by the HUGEINT-rule discipline — floats keep the Spark
-    # job for NaN ordering), the per-file stats come from bounded
-    # driver reads of just-written page-cached bytes instead of a whole
-    # distributed read-back job per commit (~0.2 s each; the streaming
-    # sinks pay one per micro-batch). Size-bounded, so large writes
-    # keep the distributed pass — adaptive, not a local-mode tune.
-    if files:
-        dtypes = dict(df.dtypes)
-        if all(dtypes.get(c) in _INT_TYPES for c in stats_cols or []) and (
-            sum(n for _, n in listed) <= _DRIVER_STATS_MAX_BYTES
-        ):
-            stats = {}
-            for f, nbytes in listed:
-                entry = _single_file_stats(root, f, stats_cols or [])
-                entry["__bytes"] = nbytes
-                stats[f] = entry
-            return files, stats
-    # stats are always collected (at minimum the per-file __rows count
-    # behind metadata-only aggregates) — one pass over just-written,
-    # page-cached bytes; the standard stats-collection cost every table
-    # format pays at write time. A zero-row dynamic-partition write emits
-    # NO part files — guard the read (zero paths raises) and commit the
-    # harmless empty version (r9 ADVICE; st27's sink relies on it).
-    # The leaf schema is the batch's schema minus partition columns
-    # (those live in col=val path segments, never in leaf footers) —
-    # passing it skips footer inference in the stats read.
-    leaf_schema = None
-    if files:
-        from pyspark.sql.types import StructType
+    return files, _listed_stats(spark, root, listed, stats_cols or [])
 
-        leaf_schema = StructType(
-            [f for f in df.schema.fields if f.name not in pcols]
+
+def _listed_stats(
+    spark: SparkSession, root: str, listed: list[tuple[str, int]], stats_cols: list[str]
+) -> dict:
+    """The stats step of a Spark write: one entry per listed
+    ``(relpath, bytes)`` through the one kernel (:func:`_single_file_stats`),
+    keyed by the listed on-disk path. Listed bytes that fit
+    :data:`_DRIVER_STATS_MAX_BYTES` are read back on the driver from the
+    page cache (no Spark job; the streaming sinks commit one write per
+    micro-batch); larger writes are read in ONE Spark job, a task per
+    file. A zero-row dynamic-partition write lists no file and commits
+    the harmless empty version (r9 ADVICE; st27's sink relies on it).
+    ``__bytes`` is the AddFile size every table format records, which
+    lets compact_small bin-pack from the manifest."""
+    files = [f for f, _ in listed]
+    if sum(n for _, n in listed) <= _DRIVER_STATS_MAX_BYTES:
+        stats = {f: _single_file_stats(root, f, stats_cols) for f in files}
+    else:
+        stats = dict(
+            spark.sparkContext.parallelize(files, len(files))
+            .map(lambda f: (f, _single_file_stats(root, f, stats_cols)))
+            .collect()
         )
-    stats = (
-        _file_stats(spark, root, sub, files, stats_cols or [], schema=leaf_schema)
-        if files
-        else {}
-    )
     for f, nbytes in listed:
-        # a 0-row part file produces no group in the stats aggregate;
-        # record it explicitly so metadata_count can trust coverage
-        stats.setdefault(f, {"__rows": 0})
-        # AddFile size (every table format records it): one bounded
-        # metadata stat per just-written file — what lets compact_small
-        # bin-pack from the manifest without listing/statting the table
         stats[f]["__bytes"] = nbytes
-    return files, stats
+    return stats
 
 
 def _check_partition_spec(
@@ -1912,7 +1807,7 @@ def _dv_rel_expr(root: str):
     URI): scheme-strip to a bare absolute path, then cut the table
     root's prefix. The manifest-relative spelling is the deletion-vector
     join key — absolute URIs must never be persisted (roots move; the
-    input_file_name/_file_stats lesson). Local roots compare against
+    input_file_name() escaping lesson). Local roots compare against
     ``os.path.abspath``; ``scheme://`` roots against ``/netloc/path``."""
     import os
     import posixpath
@@ -2950,7 +2845,7 @@ def _metadata_sum_parts(
     pending MoR deletes (dead rows still counted in file stats) and any
     file without recorded sum stats (pre-recording files, or a
     non-integer column — float sums are never recorded, see
-    :func:`_file_stats`)."""
+    :func:`_table_stats`)."""
     v = latest_version(spark, root) if version is None else version
     # r13 manifest-list fast path: per-shard [total, nonnull] recorded
     # in the index — one small JSON read, zero shard loads, when every
@@ -5382,15 +5277,15 @@ def record_ndv_stats(
 
     d = df.select(F.input_file_name().alias("_f"), F.col(col))
     # bounded collect: |missing files| x 2**p register rows, manifest
-    # metadata like _file_stats
+    # metadata like the per-file stats
     regs = hll_register_rows(d, ["_f"], col, p=p).collect()
 
     def rel(full: str) -> str:
         # manifest-relative path, NOT the basename: a dynamic-partition
         # write reuses the same part-NNNNN-<uuid> basename across its
         # col=val dirs, so basename keying would misattribute registers.
-        # input_file_name() is URI-encoded — unquote once (the
-        # _file_stats escaped-partition lesson).
+        # input_file_name() is URI-encoded — unquote once, or a
+        # Hive-escaped partition segment comes back double-encoded.
         from urllib.parse import unquote
 
         segs = unquote(full).split("/")

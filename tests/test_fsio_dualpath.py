@@ -4,9 +4,10 @@ pyarrow companions (optimization round r15):
 - in the test environment every fsio call takes the LOCAL fast path, so
   the Hadoop branch of the dual-path functions was dead code under test
   — a monkeypatched ``_local_path -> None`` sweep keeps it exercised;
-- ``_single_file_stats`` (driver-side pyarrow stats for single-file
-  writes) parity against the distributed ``_file_stats`` job on a
-  null-bearing integer file, an all-null column, and empty stats_cols;
+- the one stats kernel (``_table_stats`` via ``_single_file_stats``),
+  on the driver and in executor tasks, against a Spark
+  ``groupBy(input_file_name())`` aggregate on planted NaN/±Inf/-0.0/
+  all-null/escaped-partition/zero-row files;
 - ``create_text_atomic`` race arbitration on the local path (threads);
 - ``_local_path`` URI handling: ``file://host`` remote authority falls
   back to Hadoop instead of silently dropping the host; the
@@ -51,57 +52,130 @@ def _df(spark, lo, hi):
 # ---------------------------------------------------------------- parity
 
 
-def test_single_file_stats_parity_with_spark_job(spark, root):
-    """_single_file_stats (driver pyarrow) must equal _file_stats (the
-    distributed job) field-for-field on a null-bearing int file, an
-    all-null column, and with empty stats_cols."""
-    df = _df(spark, 0, 100).repartition(1)
-    sub = "data-parity"
-    df.write.parquet(f"{root}/{sub}")
-    files = [
-        f"{sub}/{f}"
-        for f in fsio.list_files_recursive(spark, f"{root}/{sub}")
-        if f.endswith(".parquet")
-    ]
-    assert len(files) == 1
-    for cols in (["i", "v", "allnull"], []):
-        via_spark = S._file_stats(spark, root, sub, files, cols)[files[0]]
-        via_arrow = S._single_file_stats(root, files[0], cols)
-        assert via_arrow == via_spark, f"stats_cols={cols}"
+_NAN, _INF = float("nan"), float("inf")
+
+#: one Hive partition (so one file) per planted case; the last value is
+#: Hive-escaped on disk (hh=00%3A00%3A00)
+_PLANTED = {
+    "nan": [(1, 1, 1, 1.0, "a"), (2, 2, 2, _NAN, "B"), (3, None, 3, 3.0, None)],
+    "allnan": [(1, 1, 1, _NAN, "x"), (None, 2, 2, _NAN, "y")],
+    "inf": [(-128, -32768, -(2**63), -_INF, "é"), (127, 32767, 2**63 - 1, _INF, ""),
+            (0, 0, 0, 2.0, "z")],
+    "zero": [(0, 0, 0, -0.0, "m"), (0, 0, 0, 0.0, "n")],
+    "allnull": [(None, None, None, None, None)] * 2,
+    "big": [(1, 1, 9 * 10**18, 0.5, "q"), (1, 1, 9 * 10**18, 0.25, "q")],
+    "00:00:00": [(5, 6, 7, 8.5, "hh")],
+}
 
 
-def test_multi_file_driver_stats_parity(spark, root, monkeypatch):
-    """_write_data_files takes the driver-side pyarrow stats path for
-    ANY small write (total listed bytes <= _DRIVER_STATS_MAX_BYTES, all
-    stats columns integer) — not just single-file writes. The entries
-    must equal the distributed _file_stats job field-for-field, and the
-    Spark job must provably not run on the driver path."""
-    cols = ["i", "v", "allnull"]
-    df = _df(spark, 0, 300).repartition(4, "i")
-    files, stats = S._write_data_files(df, root, stats_cols=cols)
-    assert len(files) > 1  # genuinely multi-file
-    sub = files[0].split("/")[0]
-    via_spark = S._file_stats(spark, root, sub, files, cols)
-    for f in files:
-        got = dict(stats[f])
-        assert got.pop("__bytes") > 0
-        assert got == via_spark[f], f
-    # the driver path must not have launched the Spark stats job: with
-    # _file_stats exploding, a small write still collects full stats
-    def boom(*a, **k):  # pragma: no cover - failure arm
-        raise AssertionError("distributed stats job ran on the small-write path")
+def _spark_stats_oracle(spark, root, files, cols, int_cols, schema):
+    """The reference: one Spark ``groupBy(input_file_name())`` aggregate
+    over the listed leaf files, keyed back to the on-disk relative path
+    (input_file_name() double-encodes an escaped segment: unquote once).
+    A zero-row file forms no group."""
+    from urllib.parse import unquote
 
-    monkeypatch.setattr(S, "_file_stats", boom)
-    files2, stats2 = S._write_data_files(
-        _df(spark, 300, 500).repartition(3, "i"), root, stats_cols=cols
+    from pyspark.sql import functions as F
+
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
+    for c in int_cols:
+        aggs += [
+            F.sum(F.col(c).cast("decimal(38,0)")).alias(f"_sum_{c}"),
+            F.sum(F.isnull(c).cast("long")).alias(f"_nulls_{c}"),
+        ]
+    rows = (
+        spark.read.schema(schema).parquet(*[f"{root}/{f}" for f in files])
+        .groupBy(F.input_file_name().alias("_f")).agg(*aggs).collect()
     )
-    assert files2 and all("__rows" in stats2[f] for f in files2)
-    # ...and a write above the byte ceiling falls back to the Spark job
-    monkeypatch.setattr(S, "_DRIVER_STATS_MAX_BYTES", 0)
-    with pytest.raises(AssertionError, match="distributed stats job"):
-        S._write_data_files(
-            _df(spark, 500, 600).repartition(2, "i"), root, stats_cols=cols
-        )
+    want = {f: {"__rows": 0} for f in files}
+    for r in rows:
+        full = unquote(r["_f"])
+        e = want[full[full.index("/data-") + 1 :]]
+        e["__rows"] = r["__rows"]
+        for c in cols:
+            e[c] = [r[f"_min_{c}"], r[f"_max_{c}"]]
+        for c in int_cols:
+            s = r[f"_sum_{c}"]
+            e[f"__sum_{c}"] = None if s is None else int(s)
+            e[f"__nulls_{c}"] = r[f"_nulls_{c}"]
+    return want
+
+
+def _by_value(entry):
+    """NaN made comparable; -0.0 == 0.0 already holds by value."""
+    return {
+        k: [("NaN" if isinstance(x, float) and x != x else x) for x in v]
+        if isinstance(v, list) else v
+        for k, v in entry.items()
+    }
+
+
+_COLS, _INT_COLS = ["ti", "si", "bi", "d", "s", "f"], ["ti", "si", "bi"]
+
+
+@pytest.fixture(scope="module")
+def planted(spark, tmp_path_factory):
+    """(root, listed (relpath, bytes), oracle entries): the planted
+    files, one Hive partition per case plus a zero-row file, written
+    once and aggregated once by the Spark reference."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    root = str(tmp_path_factory.mktemp("planted"))
+    leaf = T.StructType([
+        T.StructField("ti", T.ByteType()), T.StructField("si", T.ShortType()),
+        T.StructField("bi", T.LongType()), T.StructField("d", T.DoubleType()),
+        T.StructField("s", T.StringType()),
+    ])
+    schema = T.StructType([T.StructField("p", T.StringType()), *leaf.fields])
+    rows = [(p, *r) for p, rs in _PLANTED.items() for r in rs]
+    df = spark.createDataFrame(rows, schema).withColumn("f", F.col("d").cast("float"))
+    files, _ = S._write_data_files(
+        df.coalesce(1), root, partition_by="p", collect_stats=False
+    )
+    assert len(files) == len(_PLANTED)
+    assert any("/p=00%3A00%3A00/" in f for f in files)
+    leaf = leaf.add("f", T.FloatType())
+    empty = "data-empty/part-00000.parquet"  # a zero-row file, pyarrow-written
+    os.mkdir(f"{root}/data-empty")
+    pq.write_table(pa.Table.from_pylist([], schema=pa.schema([
+        ("ti", pa.int8()), ("si", pa.int16()), ("bi", pa.int64()),
+        ("d", pa.float64()), ("s", pa.string()), ("f", pa.float32()),
+    ])), f"{root}/{empty}")
+    files.append(empty)
+    want = _spark_stats_oracle(spark, root, files, _COLS, _INT_COLS, leaf)
+    assert want[empty] == {"__rows": 0}
+    return root, [(f, os.path.getsize(f"{root}/{f}")) for f in files], want
+
+
+@pytest.mark.parametrize("path", ["driver", "executor"])
+def test_stats_kernel_parity_with_spark_aggregate(spark, planted, monkeypatch, path):
+    """Every write's stats come from the one pyarrow kernel, read back on
+    the driver for a small write and by one Spark job's tasks over the
+    listed files above the cap (cap 0 here). Both must equal a Spark
+    aggregate field for field on planted files: NaN (Spark orders it
+    greatest), all-NaN, ±Inf, -0.0/0.0, all-null, tinyint/smallint/
+    bigint with a bigint sum past 2**63, a string column, a Hive-escaped
+    partition value, and a zero-row file."""
+    root, listed, want = planted
+    if path == "executor":
+        monkeypatch.setattr(S, "_DRIVER_STATS_MAX_BYTES", 0)
+    stats = S._listed_stats(spark, root, listed, _COLS)
+    assert sorted(stats) == sorted(want)
+    for f, nbytes in listed:
+        got = dict(stats[f])
+        assert got.pop("__bytes") == nbytes > 0, f
+        assert _by_value(got) == _by_value(want[f]), f
+        # no stats columns: the footer alone gives the row count
+        assert S._single_file_stats(root, f, []) == {"__rows": want[f]["__rows"]}, f
+    allnan = next(f for f, _ in listed if "/p=allnan/" in f)
+    assert _by_value(stats[allnan])["d"] == ["NaN", "NaN"]
 
 
 def test_single_file_stats_zero_row_file(spark, root):
@@ -362,23 +436,27 @@ def test_dv_summary_streams_and_never_materializes_full_column(
 
 
 def test_pa_fs_cache_hit_resolves_like_first_call(monkeypatch):
-    """A cache hit must give the fs-native path from_uri would give:
+    """A cache hit must give the fs-native path the first call gave:
     abfss keeps its container (the authority's user part), s3 its bucket,
-    hdfs none — percent-decoded, trailing slash dropped. Stubbed
-    filesystem: only the client constructor is replaced."""
+    hdfs none — trailing slash dropped, and a ``%`` kept literal as
+    Hadoop keeps it (the resolver quotes the path for from_uri, which
+    percent-decodes). Stubbed filesystem: only the client constructor is
+    replaced."""
     from urllib.parse import unquote, urlparse
 
     from pyarrow import fs as pafs
 
     calls = []
 
+    def native(u):  # the fs-native prefix: abfss container, s3 bucket
+        return {"abfss": u.netloc.split("@")[0], "s3": u.netloc}.get(u.scheme, "")
+
     class StubFileSystem:
         @staticmethod
         def from_uri(uri):
             calls.append(uri)
             u = urlparse(uri)
-            prefix = {"abfss": u.netloc.split("@")[0], "s3": u.netloc}.get(u.scheme, "")
-            return f"fs:{u.scheme}:{u.netloc}", prefix + unquote(u.path).rstrip("/")
+            return f"fs:{u.scheme}:{u.netloc}", native(u) + unquote(u.path).rstrip("/")
 
     monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
     monkeypatch.setattr(fsio, "_PA_FS_CACHE", {})
@@ -391,7 +469,10 @@ def test_pa_fs_cache_hit_resolves_like_first_call(monkeypatch):
         n = len(calls)
         got = [fsio._pa_fs(u) for u in uris]
         assert len(calls) == n + 1  # first call builds the client, the rest hit
-        want = [StubFileSystem.from_uri(u.replace("s3a:", "s3:", 1)) for u in uris]
+        want = [  # the path exactly as written, "%" escapes included
+            (f"fs:{v.scheme}:{v.netloc}", native(v) + v.path.rstrip("/"))
+            for v in (urlparse(u.replace("s3a:", "s3:", 1)) for u in uris)
+        ]
         assert got == want, uris
 
 
@@ -433,18 +514,13 @@ def test_hadoop_branch_driver_written_append(spark, tmp_path, monkeypatch):
     )
 
 
-def test_remote_branch_members_normalize_through_one_client(tmp_path, monkeypatch):
-    """A branch root's members are referenced as ``../../data-*/part-*``.
-    Object-store keys are literal, so the one pyarrow resolver must
-    collapse the ``..`` (keeping the bucket) before the driver-side
-    footer readers open them, and N per-file opens on one remote root
-    must construct ONE client. Stubbed s3 client: a filesystem that maps
-    keys onto a local dir and, like an object store, never resolves a
-    ``..`` segment."""
-    from urllib.parse import urlparse
+def _stub_s3(tmp_path, monkeypatch) -> list[str]:
+    """Replace pyarrow's client constructor with a stubbed s3 client whose
+    keys map onto ``tmp_path``: like an object store it never resolves a
+    ``..`` segment, and like the real ``from_uri`` it percent-decodes the
+    URI's path. Returns the list of URIs a client was built for."""
+    from urllib.parse import unquote, urlparse
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
     local = pafs.LocalFileSystem()
@@ -496,7 +572,21 @@ def test_remote_branch_members_normalize_through_one_client(tmp_path, monkeypatc
         def from_uri(uri):
             clients.append(uri)
             u = urlparse(uri)
-            return pafs.PyFileSystem(LiteralKeys()), u.netloc + u.path
+            return pafs.PyFileSystem(LiteralKeys()), u.netloc + unquote(u.path)
+
+    monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
+    monkeypatch.setattr(fsio, "_PA_FS_CACHE", {})
+    return clients
+
+
+def test_remote_branch_members_normalize_through_one_client(tmp_path, monkeypatch):
+    """A branch root's members are referenced as ``../../data-*/part-*``.
+    Object-store keys are literal, so the one pyarrow resolver must
+    collapse the ``..`` (keeping the bucket) before the driver-side
+    footer readers open them, and N per-file opens on one remote root
+    must construct ONE client."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     (tmp_path / "bkt/t/data-x").mkdir(parents=True)
     (tmp_path / "bkt/t/dv-y").mkdir(parents=True)
@@ -511,8 +601,7 @@ def test_remote_branch_members_normalize_through_one_client(tmp_path, monkeypatc
         pa.table({"_dv_file": ["data-x/part-0.parquet"] * 2, "_dv_pos": [0, 1]}),
         tmp_path / "bkt/t/dv-y/pos.parquet",
     )
-    monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
-    monkeypatch.setattr(fsio, "_PA_FS_CACHE", {})
+    clients = _stub_s3(tmp_path, monkeypatch)
     monkeypatch.setattr(S, "_GROUP_SCHEMA_MEMO", {})
     root = "s3://bkt/t/_branches/b"
     assert S._footer_rows(root, members) == 12
@@ -521,4 +610,29 @@ def test_remote_branch_members_normalize_through_one_client(tmp_path, monkeypatc
     assert S._dv_summary(root, ["../../dv-y/pos.parquet"]) == (
         2, ["data-x/part-0.parquet"],
     )
+    assert len(clients) == 1
+
+
+def test_remote_escaped_partition_keys_are_literal(tmp_path, monkeypatch):
+    """Spark writes a Hive-escaped partition segment (``hh=00%3A00%3A00``)
+    as that literal key, and Hadoop's ``Path(String)`` reads it
+    literally. The pyarrow resolver must too, on the first (client-
+    building) call and on cache hits, though ``from_uri`` percent-decodes:
+    the stats and footer reads of a partitioned remote write open the
+    listed key, not ``hh=00:00:00``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "bkt/t/data-x/hh=00%3A00%3A00"
+    d.mkdir(parents=True)
+    rel = "data-x/hh=00%3A00%3A00/part-0.parquet"
+    pq.write_table(pa.table({"i": pa.array([4, 9, None], pa.int64())}), d / "part-0.parquet")
+    clients = _stub_s3(tmp_path, monkeypatch)
+    root = "s3://bkt/t"
+    for _ in range(2):  # the client-building call, then a cache hit
+        assert fsio._pa_fs(f"{root}/{rel}")[1] == f"bkt/t/{rel}"
+        assert S._single_file_stats(root, rel, ["i"]) == {
+            "__rows": 3, "i": [4, 9], "__sum_i": 13, "__nulls_i": 1,
+        }
+        assert S._footer_rows(root, [rel]) == 3
     assert len(clients) == 1

@@ -5310,6 +5310,50 @@ def test_sink_no_data_batch_one_job_per_route_commits_nothing(spark, tmp_path):
         batch.unpersist()
 
 
+def test_driver_write_with_float_stats_runs_only_the_collect(spark, tmp_path):
+    """A driver-written batch whose stats columns include a double takes
+    its stats from the in-memory table too: the whole write is ONE Spark
+    job, the collect."""
+    df = spark.range(0, 60).selectExpr("cast(id as int) i", "if(id = 3, double('NaN'), id / 7) d")
+    out = {}
+    jobs = _group_jobs(
+        spark, "float-driver-write",
+        lambda: out.update(stats=S._write_data_files(
+            df, str(tmp_path / "t"), stats_cols=["i", "d"], driver=True
+        )[1]),
+    )
+    assert jobs == 1
+    (entry,) = out["stats"].values()
+    lo, hi = entry["d"]
+    assert entry["__rows"] == 60 and lo == 0.0 and hi != hi  # Spark's NaN-greatest max
+    assert "__sum_d" not in entry and entry["__sum_i"] == sum(range(60))
+
+
+def test_stats_read_jobs_by_listed_bytes(spark, tmp_path, monkeypatch):
+    """A Spark write's stats step reads its listed files on the driver
+    (zero jobs) when their bytes fit the cap, else in exactly ONE Spark
+    job, a task per file."""
+    import os
+
+    root = str(tmp_path / "t")
+    df = spark.range(0, 300).selectExpr("cast(id as int) i", "id / 3 d").repartition(3)
+    files, _ = S._write_data_files(df, root, collect_stats=False)
+    listed = [(f, os.path.getsize(f"{root}/{f}")) for f in files]
+    sc = spark.sparkContext
+    for cap, want in ((S._DRIVER_STATS_MAX_BYTES, 0), (0, 1)):
+        monkeypatch.setattr(S, "_DRIVER_STATS_MAX_BYTES", cap)
+        out = {}
+        jobs = _group_jobs(
+            spark, f"stats-step-{cap}",
+            lambda: out.update(stats=S._listed_stats(spark, root, listed, ["i", "d"])),
+        )
+        assert len(files) == 3 and sum(out["stats"][f]["__rows"] for f in files) == 300
+        assert jobs == want, cap
+    (job,) = sc.statusTracker().getJobIdsForGroup("stats-step-0")
+    (stage,) = sc.statusTracker().getJobInfo(job).stageIds
+    assert sc.statusTracker().getStageInfo(stage).numTasks == 3
+
+
 def test_sink_scans_txn_tokens_once_per_batch(spark, root, monkeypatch):
     """The sink checks its batch token once; the private append body it
     commits through must not scan every retained manifest again."""

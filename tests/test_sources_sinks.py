@@ -356,31 +356,6 @@ def test_influx_sink_abort_leaves_no_visible_output(spark, tmp_path):
     assert not glob.glob(os.path.join(out, "_MANIFEST-*"))
 
 
-def test_observed_metrics_single_pass(spark, sf_dir):
-    """A1-A3: stage counts accumulate during the one real action via
-    df.observe — no per-metric re-execution."""
-    from pyspark.sql import functions as F
-
-    from nagios_custom_etl_spark.catalog import load_table
-    from nagios_custom_etl_spark.observability import observed
-
-    ev = load_table(spark, sf_dir, "events")
-    gated, obs = observed(
-        ev,
-        "gate",
-        n_rows=F.count(F.lit(1)),
-        n_errors=F.count(F.when(F.col("event_type") == "error", 1)),
-        n_null_value=F.count(F.when(F.col("value").isNull() | F.isnan("value"), 1)),
-    )
-    kept = gated.filter(F.col("event_type") != "error").count()
-    got = obs.get
-    expect_total = ev.count()
-    expect_errors = ev.filter(F.col("event_type") == "error").count()
-    assert got["n_rows"] == expect_total
-    assert got["n_errors"] == expect_errors
-    assert kept == expect_total - expect_errors
-
-
 def _paced_fetcher_impl(endpoint, params):
     """Module-level (executor-importable) fetcher logging call times to
     the path embedded in the endpoint after 'log='."""

@@ -303,35 +303,6 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert got.select("event_id").distinct().count() == 200
 
 
-def test_streaming_observed_metrics_in_progress(spark, sf_dir):
-    """A1-A3 on the streaming path: df.observe metrics surface in each
-    micro-batch's StreamingQueryProgress — per-batch counts with no extra
-    pass, replacing the reference's per-run print logging."""
-    from pyspark.sql import functions as F
-
-    from nagios_custom_etl_spark.streaming.ops import read_events_stream
-
-    stream = read_events_stream(spark, sf_dir).observe(
-        "gate",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors"),
-    )
-    q = (
-        stream.writeStream.format("noop")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progresses = [p for p in q.recentProgress if p["observedMetrics"].get("gate")]
-    assert progresses, "no observed metrics in any micro-batch progress"
-    got = progresses[-1]["observedMetrics"]["gate"]
-    from nagios_custom_etl_spark.catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    assert got["n_rows"] == ev.count()
-    assert got["n_errors"] == ev.filter(F.col("event_type") == "error").count()
-
-
 def test_rocksdb_state_store_matches_default_provider(spark, sf_dir):
     """The RocksDB provider (the 100 TB state backend — spills to local
     disk instead of executor-heap hashmaps) must produce byte-identical
