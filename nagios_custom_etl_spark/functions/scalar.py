@@ -46,10 +46,25 @@ def davg(col: str | Column, precision: int = 18, scale: int = 2) -> Column:
 def numeric_normalize(col: str | Column, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     d = c.try_cast("double")  # non-numeric -> null (ANSI-safe, like try/except ValueError)
-    d = F.when(F.isnan(d), F.lit(None)).otherwise(d)
-    # reference uses f"{v:.2f}" (half-even on the shortest decimal repr);
-    # bround is HALF_EVEN — the matching semantic.
-    return F.bround(d, scale)
+    # The reference's f"{v:.2f}" rounds the exact binary value (2.675 is
+    # 2.67499... -> 2.67). bround rounds half-even on the shortest decimal
+    # repr, which agrees unless that repr stops on a tie digit at scale+1
+    # ("2.675"). For such a tie, d * 10**scale lands within a few ulps of
+    # k + 0.5; rows that close (a 4.5x margin over the product's error)
+    # take format_number, whose DecimalFormat rounds the binary value.
+    # Doubles at or above 2**53 are integers, so bround is exact there;
+    # NaN sorts above them, so it never reaches format_number.
+    # One CASE with d used bare keeps d a single shared parse.
+    y = d * float(10**scale)
+    near_tie = (F.abs(d) < float(2**53)) & (
+        F.abs(F.abs(y % 1.0) - 0.5) <= F.abs(y) * 1e-15
+    )
+    exact = F.regexp_replace(F.format_number(d, scale), ",", "").cast("double")
+    return (
+        F.when(F.isnan(d), F.lit(None))
+        .when(near_tie, exact)
+        .otherwise(F.bround(d, scale))
+    )
 
 
 # ---------------------------------------------------------------------------

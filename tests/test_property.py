@@ -51,6 +51,22 @@ def test_numeric_normalize_matches_reference(spark, values):
             assert got[i] == expected, f"{v!r}: {got[i]} != {expected}"
 
 
+def test_numeric_normalize_rounds_the_binary_value_on_ties(spark):
+    """Decimal ties at the third place: the double's exact value decides
+    (2.675 is 2.67499..., 549755813888.285 is ...28503...), an exact binary
+    tie (0.125) goes half-even, and huge or infinite values pass through."""
+    values = [
+        "2.675", "-2.675", "1.005", "0.015", "-0.005", "-0.001", "0.125",
+        "0.375", "549755813888.285", "1234567.125", "12", "0.1", "1e300",
+        "-1e300", "1e-300", "9007199254740993.5", "inf", "-inf", "NaN", "x",
+    ]
+    df = spark.createDataFrame(list(enumerate(values)), "i long, s string")
+    got = dict(df.select("i", numeric_normalize("s")).collect())
+    assert [got[i] for i in range(len(values))] == [
+        ref_numeric_normalize(v) for v in values
+    ]
+
+
 @settings(max_examples=10, deadline=None)
 @given(st.lists(st.text(alphabet=" abçñ中\t", min_size=0, max_size=30), min_size=1, max_size=30))
 def test_tokens_match_python_split(spark, texts):
