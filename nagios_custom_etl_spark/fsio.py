@@ -1,5 +1,5 @@
-"""Small-file and metadata IO for the engine: the OS, pyarrow.fs or the
-Hadoop FileSystem API, whichever serves the path.
+"""Small-file and metadata IO for the engine: pyarrow.fs wherever it
+serves the path, the Hadoop FileSystem API where it does not.
 
 Every op takes a path in any scheme the cluster can reach — file:/,
 hdfs://, s3a://, abfss:// — so the ANN index sidecar
@@ -7,51 +7,36 @@ hdfs://, s3a://, abfss:// — so the ANN index sidecar
 (operators/snapshots.py) run where a 100 TB table lives, on an object
 store or HDFS, not only on the driver's local disk. :func:`_pa_fs` is the
 engine's ONE pyarrow path resolver: these ops, the table log's
-``ArrowLog`` and every caller without a SparkSession (``session_free``)
-share its client cache and its path normalization.
+``ArrowLog`` and every caller without a SparkSession share its client
+cache and its path normalization.
 
-LOCAL FAST PATH (r14 optimization round, guide §5/§7.3): every Hadoop
-call from Python is 2-6 py4j round trips (~1-3 ms each), and a single
-table commit makes dozens of them — profiled at ~35% of the wall time of
-the metadata-heavy bench queries, pure driver-side overhead that exists
-only in local mode. When a path provably resolves to the LOCAL
-filesystem (``file:`` scheme, or scheme-less under a ``file:`` Hadoop
-``fs.defaultFS``) each operation short-circuits to the equivalent
-``os``/``shutil`` call. Semantics are preserved or strengthened:
-
-- :func:`create_text_atomic` keeps the two-phase tmp + no-overwrite
-  move; locally the move is ``os.link`` + ``unlink``, which is ATOMIC
-  no-overwrite on POSIX — strictly stronger than Hadoop's
-  check-then-rename on RawLocalFileSystem (the guarantee Delta accepts
-  for ``file:/``).
-- :func:`rename_nooverwrite` mirrors Hadoop-local exactly: existence
-  check then ``os.rename`` — the source vanishes atomically (claim
-  arbitration unchanged), the no-overwrite check has the same TOCTOU
-  window RawLocalFileSystem has today.
-- Listings return the same sorted relative names; absent paths behave
-  identically ([] / False / FileNotFoundError).
-
-REMOTE ROUTING (r15, r14-verdict item 4): remote URIs are served by
-``pyarrow.fs`` when it can load the scheme — the driver's own process,
-no py4j — with ``Path.getFileSystem(hadoopConf)`` as the LAST RESORT for
-schemes pyarrow cannot serve, for bare paths under a non-local
-``fs.defaultFS``, and for the two ATOMIC ops (:func:`create_text_atomic`
-/ :func:`rename_nooverwrite`), whose no-overwrite-rename commit guarantee
-pyarrow does not provide. The routing is a driver-overhead
-optimization, not a semantic fork.
+ROUTING: each op has two routes. ``pyarrow.fs`` comes first — the
+driver's own process, no py4j (every Hadoop call from Python is 2-6 py4j
+round trips of ~1-3 ms, and one table commit makes dozens). A local path
+(a ``file:`` URI, or a bare path under a ``file:`` ``fs.defaultFS``) maps
+to the one ``LocalFileSystem``; a remote URI to pyarrow's client for its
+scheme. ``Path.getFileSystem(hadoopConf)`` is the LAST RESORT: for
+schemes pyarrow cannot load, ``file://host`` with a remote authority,
+bare paths under a non-local ``fs.defaultFS``, and the remote forms of
+the two ATOMIC ops (:func:`create_text_atomic` /
+:func:`rename_nooverwrite`), whose no-overwrite-rename commit guarantee
+pyarrow does not provide. Listings return the same sorted relative names
+on every route; absent paths behave alike ([] / False /
+FileNotFoundError).
 
 The one primitive object stores make awkward — atomic create-if-absent —
 is exposed as :func:`create_text_atomic`. It is two-phase so a reader can
 never observe a torn commit: the full content is written under a temp
-name first, then renamed into place with ``FileContext.rename(...,
-Rename.NONE)`` — the no-overwrite rename Delta's HDFSLogStore commits
-through. The rename is the commit point: the destination either does not
-exist or holds COMPLETE content, and of two racing writers exactly one
-wins (the loser gets :class:`FileExistsError`). On HDFS the no-overwrite
-check is enforced server-side in one namenode op; on raw local FS it is
-check-then-rename (the same guarantee Delta accepts for ``file:/``); on
-S3A it maps to a conditional PUT (If-None-Match) on recent Hadoop, else
-the caller layers a lock service — protocol unchanged either way.
+name first, then moved into place with no overwrite — locally
+``os.link`` (atomic no-overwrite on POSIX; pyarrow has no
+create-if-absent), remotely ``FileContext.rename(..., Rename.NONE)``, the
+rename Delta's HDFSLogStore commits through. The move is the commit
+point: the destination either does not exist or holds COMPLETE content,
+and of two racing writers exactly one wins (the loser gets
+:class:`FileExistsError`). On HDFS the no-overwrite check is enforced
+server-side in one namenode op; on S3A it maps to a conditional PUT
+(If-None-Match) on recent Hadoop, else the caller layers a lock service
+— protocol unchanged either way.
 """
 
 from __future__ import annotations
@@ -59,7 +44,6 @@ from __future__ import annotations
 import os
 import posixpath
 import re
-import shutil
 import uuid
 from urllib.parse import quote, urlsplit, urlunsplit
 
@@ -92,30 +76,23 @@ def _file_uri_path(path: str) -> str | None:
     return p or "/"
 
 
-def _local_path(spark, path: str) -> str | None:
-    """The plain OS path when ``path`` provably lives on the LOCAL
-    filesystem, else None (take the Hadoop route). ``file:`` URIs are
-    local by definition, except with a remote authority
-    (:func:`_file_uri_path`); scheme-less paths are local iff the
-    session's ``fs.defaultFS`` is ``file:`` (cached per session — on a
-    cluster whose default FS is HDFS, bare paths correctly stay on
-    Hadoop)."""
-    if path.startswith("file:"):
-        return _file_uri_path(path)
-    if _SCHEME_RE.match(path):
-        return None  # foreign scheme: hdfs:, s3a:, abfss:, ...
-    key = id(spark)
-    hit = _DEFAULT_FS_LOCAL.get(key)
+def _bare_path_local(spark) -> bool:
+    """Whether a scheme-less path is on the local filesystem: always
+    without a session; with one, iff its ``fs.defaultFS`` is ``file:``
+    (cached per session — on a cluster whose default FS is HDFS, bare
+    paths stay on Hadoop)."""
+    if spark is None:
+        return True
+    hit = _DEFAULT_FS_LOCAL.get(id(spark))
     if hit is not None and hit[0] is spark:
-        isloc = hit[1]
-    else:
-        try:
-            conf = spark._jsc.hadoopConfiguration()
-            isloc = str(conf.get("fs.defaultFS", "file:///")).startswith("file:")
-        except Exception:  # noqa: BLE001 — torn-down session: no fast path
-            return None
-        _DEFAULT_FS_LOCAL[key] = (spark, isloc)
-    return path if isloc else None
+        return hit[1]
+    try:
+        conf = spark._jsc.hadoopConfiguration()
+        isloc = str(conf.get("fs.defaultFS", "file:///")).startswith("file:")
+    except Exception:  # noqa: BLE001 — torn-down session: leave it to Hadoop
+        return False
+    _DEFAULT_FS_LOCAL[id(spark)] = (spark, isloc)
+    return isloc
 
 
 # (scheme, authority) -> (pyarrow FileSystem, fs-native prefix of the
@@ -128,16 +105,18 @@ _PA_FS_CACHE: dict[tuple[str, str], tuple[object, str]] = {}
 _PA_SCHEME_ALIASES = {"s3a": "s3", "s3n": "s3"}
 
 
-def _pa_fs(path: str, session_free: bool = False):
+def _pa_fs(path: str, spark=None):
     """(pyarrow FileSystem, fs-native path) for ``path``, or None when
     pyarrow cannot serve it (the caller falls back to Hadoop). ``file:``
     URIs (``file:/x`` included) map to the one LocalFileSystem, except
-    with a remote authority (pyarrow would silently drop the host).
+    with a remote authority (pyarrow would silently drop the host); a
+    bare path does too when :func:`_bare_path_local` says so for
+    ``spark``.
 
-    ``session_free=True`` is the form for callers with no SparkSession
-    (the streaming sources, executor tasks, the driver's footer reads):
-    with no Hadoop conf to consult, a bare path is local, and a path
-    pyarrow cannot serve raises instead of returning None.
+    Without a session (the streaming sources, executor tasks, the
+    driver's footer reads) there is no Hadoop to fall back to: a bare
+    path is local, and a path pyarrow cannot serve raises instead of
+    returning None.
 
     A remote path is normalized (``.``, ``..``, doubled and trailing
     slashes) with its authority kept: object-store keys are literal, so
@@ -153,11 +132,12 @@ def _pa_fs(path: str, session_free: bool = False):
     have."""
     is_file = path.startswith("file:")
     if is_file or not _SCHEME_RE.match(path):
-        # a bare path under a session is defaultFS territory (Hadoop),
-        # and so is file:// with a remote authority
-        local = _file_uri_path(path) if is_file else path if session_free else None
+        if is_file:
+            local = _file_uri_path(path)
+        else:
+            local = path if _bare_path_local(spark) else None
         if local is None:
-            if session_free:
+            if spark is None:
                 raise ValueError(f"no pyarrow filesystem serves {path!r}")
             return None
         hit = _PA_FS_CACHE.get(("file", ""))
@@ -182,12 +162,19 @@ def _pa_fs(path: str, session_free: bool = False):
             urlunsplit((scheme, parts.netloc, quote(norm), parts.query, parts.fragment))
         )
     except Exception:  # noqa: BLE001 — scheme pyarrow can't serve
-        if session_free:
+        if spark is None:
             raise
         return None
     if tail and p.endswith(tail):
         _PA_FS_CACHE[key] = (fs, p[: len(p) - len(tail)])
     return fs, p
+
+
+def _is_local(pf) -> bool:
+    """Whether a :func:`_pa_fs` result is the local filesystem."""
+    from pyarrow import fs as pafs
+
+    return pf is not None and isinstance(pf[0], pafs.LocalFileSystem)
 
 
 def _fs(spark, path: str):
@@ -203,15 +190,8 @@ def write_text(spark, path: str, text: str) -> None:
 
 def write_bytes(spark, path: str, data) -> None:
     """Write (overwrite) a small file with ``data`` (any bytes-like
-    object): the OS path when local, pyarrow.fs for a remote URI it can
-    serve, else Hadoop."""
-    lp = _local_path(spark, path)
-    if lp is not None:
-        os.makedirs(os.path.dirname(lp) or "/", exist_ok=True)
-        with open(lp, "wb") as fh:
-            fh.write(data)
-        return
-    pf = _pa_fs(path)
+    object): pyarrow.fs when it serves the path, else Hadoop."""
+    pf = _pa_fs(path, spark)
     if pf is not None:
         fs, p = pf
         parent = p.rsplit("/", 1)[0] if "/" in p else ""
@@ -238,34 +218,39 @@ def create_text_atomic(spark, path: str, text: str) -> None:
     ``latest_version`` + manifest read could hit).
     Raises :class:`FileExistsError` for the loser of a commit race (its
     temp file is cleaned up); other IO failures propagate unchanged. A
-    writer that crashes before rename leaves only a ``_tmp_*`` file,
+    writer that crashes before the move leaves only a ``_tmp_*`` file,
     which readers ignore and the orphan GC sweeps.
 
     Locally the move is ``os.link`` (atomic no-overwrite on POSIX) with
-    a check-then-rename fallback for link-less filesystems; remotely it
-    is the no-overwrite ``FileContext.rename`` Delta commits through.
+    a check-then-rename fallback for link-less filesystems — the
+    guarantee Hadoop's RawLocalFileSystem gives and Delta accepts for
+    ``file:/``; remotely it is the no-overwrite ``FileContext.rename``
+    Delta commits through.
     """
-    lp = _local_path(spark, path)
-    if lp is not None:
-        d = os.path.dirname(lp) or "/"
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f"_tmp_{uuid.uuid4().hex}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(text)
+    pf = _pa_fs(path, spark)
+    if _is_local(pf):
+        from pyarrow import fs as pafs
+
+        fs, lp = pf
+        d = posixpath.dirname(lp)
+        if d:
+            fs.create_dir(d, recursive=True)
+        tmp = posixpath.join(d, f"_tmp_{uuid.uuid4().hex}")
+        with fs.open_output_stream(tmp) as out:
+            out.write(text.encode("utf-8"))
         try:
             os.link(tmp, lp)
         except FileExistsError as ex:
-            os.unlink(tmp)
+            fs.delete_file(tmp)
             raise FileExistsError(path) from ex
         except OSError:
-            # filesystem without hard links: Hadoop-local parity
-            # (check-then-rename)
-            if os.path.exists(lp):
-                os.unlink(tmp)
+            # filesystem without hard links: check-then-rename
+            if fs.get_file_info(lp).type != pafs.FileType.NotFound:
+                fs.delete_file(tmp)
                 raise FileExistsError(path) from None
-            os.rename(tmp, lp)
+            fs.move(tmp, lp)
             return
-        os.unlink(tmp)
+        fs.delete_file(tmp)
         return
     fs, jpath, jvm = _fs(spark, path)
     qual = fs.makeQualified(jpath)
@@ -306,15 +291,19 @@ def rename_nooverwrite(spark, src: str, dst: str) -> None:
     dst must share a filesystem (same table root in practice).
 
     Locally this mirrors Hadoop's RawLocalFileSystem exactly: existence
-    check then ``rename(2)`` — the SOURCE vanishes atomically (so a
-    claimed file can never be claimed twice), the dst no-overwrite check
-    has the same narrow TOCTOU window the Hadoop local path has."""
-    lsrc, ldst = _local_path(spark, src), _local_path(spark, dst)
-    if lsrc is not None and ldst is not None:
-        if os.path.exists(ldst):
+    check then ``LocalFileSystem.move``, which is ``rename(2)`` — the
+    SOURCE vanishes atomically (so a claimed file can never be claimed
+    twice), the dst no-overwrite check has the same narrow TOCTOU window
+    the Hadoop local path has. Remote renames go through Hadoop."""
+    psrc, pdst = _pa_fs(src, spark), _pa_fs(dst, spark)
+    if _is_local(psrc) and _is_local(pdst):
+        from pyarrow import fs as pafs
+
+        fs = psrc[0]
+        if fs.get_file_info(pdst[1]).type != pafs.FileType.NotFound:
             raise FileExistsError(dst)
         try:
-            os.rename(lsrc, ldst)
+            fs.move(psrc[1], pdst[1])
         except FileNotFoundError as ex:
             raise FileNotFoundError(src) from ex
         return
@@ -342,34 +331,21 @@ def rename_nooverwrite(spark, src: str, dst: str) -> None:
 
 
 def read_text(spark, path: str) -> str:
-    lp = _local_path(spark, path)
-    if lp is not None:
-        with open(lp, encoding="utf-8") as fh:
-            return fh.read()
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         fs, p = pf
         with fs.open_input_stream(p) as fh:
             return fh.read().decode("utf-8")
     fs, jpath, jvm = _fs(spark, path)
     stream = fs.open(jpath)
-    try:
-        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
-        chunks = []
-        line = reader.readLine()
-        while line is not None:
-            chunks.append(line)
-            line = reader.readLine()
-        return "\n".join(chunks)
+    try:  # the bytes in one call, decoded as the other route decodes them
+        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream)).decode("utf-8")
     finally:
         stream.close()
 
 
 def exists(spark, path: str) -> bool:
-    lp = _local_path(spark, path)
-    if lp is not None:
-        return os.path.exists(lp)
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         from pyarrow import fs as pafs
 
@@ -380,20 +356,9 @@ def exists(spark, path: str) -> bool:
 
 
 def delete(spark, path: str, recursive: bool = True) -> bool:
-    """Delete a path; returns False if it was already absent."""
-    lp = _local_path(spark, path)
-    if lp is not None:
-        if not os.path.lexists(lp):
-            return False
-        if os.path.isdir(lp) and not os.path.islink(lp):
-            if recursive:
-                shutil.rmtree(lp)
-            else:
-                os.rmdir(lp)  # non-empty dir raises, like Hadoop delete(d, false)
-        else:
-            os.unlink(lp)
-        return True
-    pf = _pa_fs(path)
+    """Delete a path; returns False if it was already absent. A symlink
+    is removed itself, never its target."""
+    pf = _pa_fs(path, spark)
     if pf is not None:
         from pyarrow import fs as pafs
 
@@ -415,11 +380,7 @@ def delete(spark, path: str, recursive: bool = True) -> bool:
 
 
 def mkdirs(spark, path: str) -> None:
-    lp = _local_path(spark, path)
-    if lp is not None:
-        os.makedirs(lp, exist_ok=True)
-        return
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         fs, p = pf
         fs.create_dir(p, recursive=True)
@@ -432,14 +393,7 @@ def list_names(spark, path: str) -> list[str]:
     """Basenames of a directory's children ([] if the dir is absent) —
     used only on METADATA directories (manifests, one data subdir);
     table reads never list, they plan from explicit manifest file lists."""
-    lp = _local_path(spark, path)
-    if lp is not None:
-        if not os.path.exists(lp):
-            return []
-        if os.path.isfile(lp):  # Hadoop listStatus(file) lists the file
-            return [os.path.basename(lp)]
-        return sorted(os.listdir(lp))
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         from pyarrow import fs as pafs
 
@@ -447,7 +401,7 @@ def list_names(spark, path: str) -> list[str]:
         info = fs.get_file_info(p)
         if info.type == pafs.FileType.NotFound:
             return []
-        if info.type == pafs.FileType.File:
+        if info.type == pafs.FileType.File:  # Hadoop listStatus(file) lists the file
             return [info.base_name]
         return sorted(
             i.base_name for i in fs.get_file_info(pafs.FileSelector(p))
@@ -472,18 +426,7 @@ def list_files_with_sizes(spark, path: str) -> list[tuple[str, int]]:
     per-file ``getFileStatus`` round trips after a listing that already
     carried the lengths were pure overhead (profiled at ~0.1 s per
     32-file commit in local mode)."""
-    lp = _local_path(spark, path)
-    if lp is not None:
-        if not os.path.exists(lp):
-            return []
-        out = []
-        base = lp.rstrip("/")
-        for dirpath, _dirnames, filenames in os.walk(base):
-            for fn in filenames:
-                full = os.path.join(dirpath, fn)
-                out.append((os.path.relpath(full, base), os.stat(full).st_size))
-        return sorted(out)
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         from pyarrow import fs as pafs
 
@@ -514,10 +457,7 @@ def mtime_ms(spark, path: str) -> int:
     """Modification time of a path in epoch millis — the retention
     signal orphan GC uses to spare files an in-flight writer just wrote
     but has not yet committed (Delta VACUUM's retention check)."""
-    lp = _local_path(spark, path)
-    if lp is not None:
-        return os.stat(lp).st_mtime_ns // 1_000_000
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         from pyarrow import fs as pafs
 
@@ -534,10 +474,7 @@ def mtime_ms(spark, path: str) -> int:
 def file_size(spark, path: str) -> int:
     """Byte length of a file — the AddFile ``size`` every table format
     records; compact_small's bin-packing input."""
-    lp = _local_path(spark, path)
-    if lp is not None:
-        return os.stat(lp).st_size
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         from pyarrow import fs as pafs
 
@@ -556,11 +493,7 @@ def stat_mtime_size(spark, path: str) -> tuple[int, int]:
     cache's file-identity probe makes this pair of calls on every
     access, and two separate ``getFileStatus`` round trips per probe
     were measurable overhead in local mode."""
-    lp = _local_path(spark, path)
-    if lp is not None:
-        st = os.stat(lp)
-        return st.st_mtime_ns // 1_000_000, st.st_size
-    pf = _pa_fs(path)
+    pf = _pa_fs(path, spark)
     if pf is not None:
         from pyarrow import fs as pafs
 

@@ -448,7 +448,7 @@ def _build_shards_distributed(
         from pyarrow.fs import FileType
 
         text, digest, meta = _shard_payload(version, idx, sub, sstats, sseqs)
-        fs, base = fsio._pa_fs(sdir, session_free=True)
+        fs, base = fsio._pa_fs(sdir)
         dst = f"{base}/{meta['path']}"
         if fs.get_file_info(dst).type != FileType.NotFound:
             return meta, 0  # content-addressed: identical bytes exist
@@ -485,7 +485,7 @@ def _try_incremental_ckpt(spark: SparkSession, root: str, version: int) -> bool:
     Returns False (caller falls back to the exact full write) whenever
     the incremental form is not provably identical to it: a full
     manifest or missing version file in the chain, an inline previous
-    checkpoint, a wholesale seqs drop, a shrink below the sharding
+    checkpoint, a drop of the base's seqs, a shrink below the sharding
     threshold, or any membership-count mismatch after the fold."""
     log = _FsioLog(spark, root)
     try:
@@ -494,101 +494,36 @@ def _try_incremental_ckpt(spark: SparkSession, root: str, version: int) -> bool:
         return False  # a version file in the chain is gone
     if base_idx.get("format") != table_log.CKPT_LIST_FORMAT:
         return False  # a full manifest or inline checkpoint: full write is right
-    has_seqs = bool(base_idx.get("has_seqs"))
-    total = sum(sm["n_files"] for sm in base_idx["shards"])
-    fields = dict(base_idx["base"])
-    added: set[str] = set()  # chain-added files still present
-    add_stats: dict = {}
-    add_seqs: dict = {}
-    prev_removed: set[str] = set()  # prev members removed (or re-added)
-    stat_set: dict = {}  # prev members: stats overridden
-    stat_del: set[str] = set()  # prev members: stats deleted
-    seq_set: dict = {}
-    seq_del: set[str] = set()
-    for d in chain:
-        fields = dict(d["base"])
-        if has_seqs and "seqs" not in d:
-            return False  # seqs dropped wholesale: every prev entry dies
-        for f in d.get("files_removed", ()):
-            total -= 1
-            if f in added:
-                added.discard(f)
-                add_stats.pop(f, None)
-                add_seqs.pop(f, None)
-            else:
-                prev_removed.add(f)
-        for f in d.get("files_added", ()):
-            total += 1
-            # a re-added prev member stays in prev_removed (its old
-            # shard must still rewrite without it) AND lands in `added`
-            # (the new shard carries its post-fold stats)
-            added.add(f)
-        for f in d.get("stats_del", ()):
-            if f in added:
-                add_stats.pop(f, None)
-            else:
-                stat_del.add(f)
-                stat_set.pop(f, None)
-        for f, s in (d.get("stats_set") or {}).items():
-            if f in added:
-                add_stats[f] = s
-            else:
-                stat_set[f] = s
-                stat_del.discard(f)
-        if "seqs" in d:
-            has_seqs = True
-            for f in d["seqs"]["del"]:
-                if f in added:
-                    add_seqs.pop(f, None)
-                else:
-                    seq_del.add(f)
-                    seq_set.pop(f, None)
-            for f, s in d["seqs"]["set"].items():
-                if f in added:
-                    add_seqs[f] = s
-                else:
-                    seq_set[f] = s
-                    seq_del.discard(f)
+    fold = table_log.fold(chain)
+    if fold.seqs_dropped and base_idx.get("has_seqs"):
+        return False  # seqs dropped wholesale: every prev entry dies
+    total = sum(sm["n_files"] for sm in base_idx["shards"]) + fold.files_delta
     if total < _SHARD_MIN_FILES:
         return False  # table shrank: inline checkpoint is the right form
-    touched_prev = prev_removed | set(stat_set) | stat_del | set(seq_set) | seq_del
+    # prev members the chain removed or re-statted: their shards rewrite
+    # (a re-added member's too — the new shard carries its final stats)
+    to_locate = fold.removed | (set(fold.stats) | set(fold.seqs)) - fold.added
     reused: list[dict] = []
     pool: list[str] = []
-    pool_stats: dict = {}
-    pool_seqs: dict = {}
-    to_locate = set(touched_prev)
+    stats: dict = {}
+    seqs: dict = {}
     for sm in base_idx["shards"]:
         if to_locate:
             sh = log.read_json(sm["path"])
-            members = sh["files"]
-            hit = [f for f in members if f in touched_prev]
-            if hit:
-                to_locate.difference_update(hit)
-                sstats = sh.get("stats") or {}
-                sseqs = sh.get("seqs") or {}
-                for f in members:
-                    if f in prev_removed:
-                        continue
-                    pool.append(f)
-                    s = None if f in stat_del else stat_set.get(f, sstats.get(f))
-                    if s is not None:
-                        pool_stats[f] = s
-                    q = None if f in seq_del else seq_set.get(f, sseqs.get(f))
-                    if q is not None:
-                        pool_seqs[f] = q
+            if to_locate.intersection(sh["files"]):
+                to_locate.difference_update(sh["files"])
+                pool.extend(f for f in sh["files"] if f not in fold.removed)
+                stats.update(sh.get("stats") or {})
+                seqs.update(sh.get("seqs") or {})
                 continue
         reused.append(sm)
-    for f in sorted(added):
-        pool.append(f)
-        if f in add_stats:
-            pool_stats[f] = add_stats[f]
-        if f in add_seqs:
-            pool_seqs[f] = add_seqs[f]
+    pool.extend(sorted(fold.added))
     if sum(sm["n_files"] for sm in reused) + len(pool) != total:
         return False  # fold inconsistency: take the exact full write
     _write_sharded_ckpt(
-        spark, root, version, fields, pool, pool_stats,
-        pool_seqs if has_seqs else None, reused,
+        spark, root, version,
+        base_idx["base"] if fold.fields is None else fold.fields, pool,
+        *fold.maps(pool, stats, seqs, bool(base_idx.get("has_seqs"))), reused,
     )
     return True
 
@@ -792,13 +727,32 @@ def _plan_pruned_state(
     if full is None:
         log = _FsioLog(spark, root)
         _, base_obj, chain, _ = table_log.walk(log, version)
-        # a shard envelope is the union of its members' ranges: one the
-        # per-file stats check rules out holds no candidate
-        if base_obj.get("format") == table_log.CKPT_LIST_FORMAT and not all(
-            table_log.stats_check(sm.get("ranges"), preds)
-            for sm in base_obj["shards"]
-        ):
-            return _candidate_fold(log, base_obj, chain, preds)
+        if base_obj.get("format") == table_log.CKPT_LIST_FORMAT:
+            # a shard envelope is the union of its members' ranges: one
+            # the per-file stats check rules out holds no candidate
+            shards = base_obj["shards"]
+            keep = [sm for sm in shards if table_log.stats_check(sm.get("ranges"), preds)]
+            if len(keep) < len(shards):
+                # read only those, and fold the chain over their members
+                # plus every delta-added file
+                fold = table_log.fold(chain)
+                files: set[str] = set()
+                stats: dict = {}
+                seqs: dict = {}
+                for sm in keep:
+                    sh = log.read_json(sm["path"])
+                    files.update(sh["files"])
+                    stats.update(sh.get("stats") or {})
+                    seqs.update(sh.get("seqs") or {})
+                m = dict(base_obj["base"] if fold.fields is None else fold.fields)
+                m["files"] = sorted((files - fold.removed) | fold.added)
+                m["stats"], sq = fold.maps(
+                    m["files"], stats, seqs, bool(base_obj.get("has_seqs"))
+                )
+                if sq is not None:
+                    m["seqs"] = sq
+                m["_files_total"] = sum(sm["n_files"] for sm in shards) + fold.files_delta
+                return m
         # every file is a candidate (inline checkpoint, full manifest, or
         # no shard excluded): the planner holds the FULL state anyway, so
         # fold it exactly and memoize it under _state()'s key (r13
@@ -810,54 +764,6 @@ def _plan_pruned_state(
         _cache_state(key, full)
     m = _copy_json(full)
     m["_files_total"] = len(m["files"])
-    return m
-
-
-def _candidate_fold(log, index: dict, chain: list[dict], preds: list[tuple]) -> dict:
-    """:func:`_plan_pruned_state`'s planning state over a manifest-list
-    base that excludes some shards: only the intersecting shards are
-    read, and the delta chain folds restricted to their candidates."""
-    files: dict[str, bool] = {}
-    stats: dict = {}
-    seqs: dict = {}
-    fields = dict(index["base"])
-    has_seqs = bool(index.get("has_seqs"))
-    total = sum(sm["n_files"] for sm in index["shards"])
-    for sm in index["shards"]:
-        if not table_log.stats_check(sm.get("ranges"), preds):
-            continue  # provably no member can match: skip its bytes
-        sh = log.read_json(sm["path"])
-        for f in sh["files"]:
-            files[f] = True
-        stats.update(sh.get("stats") or {})
-        seqs.update(sh.get("seqs") or {})
-    for d in chain:  # the exact _apply_delta fold, restricted to candidates
-        fields = dict(d["base"])
-        removed = d.get("files_removed", ())
-        total += len(d.get("files_added", ())) - len(removed)
-        for f in removed:
-            files.pop(f, None)
-            seqs.pop(f, None)
-        for f in d.get("files_added", ()):
-            files[f] = True
-        for f in d.get("stats_del", ()):
-            stats.pop(f, None)
-        for f, s in (d.get("stats_set") or {}).items():
-            if f in files:
-                stats[f] = s
-        if "seqs" in d:
-            has_seqs = True
-            for f in d["seqs"]["del"]:
-                seqs.pop(f, None)
-            for f, s in d["seqs"]["set"].items():
-                if f in files:
-                    seqs[f] = s
-    m = dict(fields)
-    m["files"] = sorted(files)
-    m["stats"] = {f: stats[f] for f in m["files"] if f in stats}
-    if has_seqs:
-        m["seqs"] = {f: seqs[f] for f in m["files"] if f in seqs}
-    m["_files_total"] = total
     return m
 
 
@@ -1028,7 +934,7 @@ def _single_file_stats(root: str, relpath: str, stats_cols: list[str]) -> dict:
     (:func:`_listed_stats`)."""
     import pyarrow.parquet as pq
 
-    fs, path = fsio._pa_fs(f"{root}/{relpath}", session_free=True)
+    fs, path = fsio._pa_fs(f"{root}/{relpath}")
     if not stats_cols:
         return {"__rows": pq.read_metadata(path, filesystem=fs).num_rows}
     return _table_stats(pq.read_table(path, columns=stats_cols, filesystem=fs), stats_cols)
@@ -1954,7 +1860,7 @@ def _group_schema_fingerprint(root: str, sub: str, one_file: str) -> str:
         return hit
     import pyarrow.parquet as pq
 
-    fs, path = fsio._pa_fs(f"{root}/{one_file}", session_free=True)
+    fs, path = fsio._pa_fs(f"{root}/{one_file}")
     fp = str(pq.read_schema(path, filesystem=fs).remove_metadata())
     if len(_GROUP_SCHEMA_MEMO) >= _GROUP_SCHEMA_MEMO_MAX:
         for k in list(_GROUP_SCHEMA_MEMO)[: _GROUP_SCHEMA_MEMO_MAX // 2]:
@@ -2231,7 +2137,7 @@ def _footer_rows(root: str, dfiles: list[str]) -> int:
 
     n = 0
     for f in dfiles:
-        fs, path = fsio._pa_fs(f"{root}/{f}", session_free=True)
+        fs, path = fsio._pa_fs(f"{root}/{f}")
         n += pq.read_metadata(path, filesystem=fs).num_rows
     return n
 
@@ -2255,7 +2161,7 @@ def _dv_summary(root: str, dfiles: list[str]) -> tuple[int, list[str]]:
     n = 0
     targets: set[str] = set()
     for f in dfiles:
-        fs, path = fsio._pa_fs(f"{root}/{f}", session_free=True)
+        fs, path = fsio._pa_fs(f"{root}/{f}")
         with pq.ParquetFile(path, filesystem=fs) as pf:
             n += pf.metadata.num_rows
             if pf.metadata.num_rows == 0:

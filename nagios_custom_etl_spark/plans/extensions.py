@@ -12653,11 +12653,9 @@ def x156_distributed_ckpt_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         blobs = {
             n: fsio.read_text(spark, f"{S._snap_dir(root)}/{n}") for n in names
         }
-        fs, jp, _ = fsio._fs(spark, S._ckpt_path(root, 1))
-        fs.delete(jp, False)
+        fsio.delete(spark, S._ckpt_path(root, 1), recursive=False)
         for n in names:
-            f2, j2, _ = fsio._fs(spark, f"{S._snap_dir(root)}/{n}")
-            f2.delete(j2, False)
+            fsio.delete(spark, f"{S._snap_dir(root)}/{n}", recursive=False)
         S._DIST_CKPT_MIN_SHARDS = 9999  # force the driver loop
         S._STATE_CACHE.clear()
         S._write_checkpoint(spark, root, 1)

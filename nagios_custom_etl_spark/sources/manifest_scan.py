@@ -18,11 +18,14 @@ planning: the walk to the base is the table log's own
 (``table_log.walk``), shard-envelope exclusion happens on the driver
 from the index alone, the executor and the driver apply the pruned
 readers' per-file rule (``table_log.stats_check`` then
-``table_log.path_check``), and the delta-chain overrides (files
-added/removed/re-statted after the checkpoint — O(commits) small
-records) are applied on the driver, which also re-checks any file whose
-stats a delta changed. Tables with pending MoR deletes fall back to the
-single-node planner (their reads need the seqs map anyway).
+``table_log.path_check``), and the delta chain above the checkpoint
+(O(commits) small records) folds on the driver through the table log's
+one chain fold (``table_log.fold``, which the single-node planner and
+the incremental checkpoint writer read too): removed files drop, and
+every delta-added file and every member whose stats a delta changed is
+re-decided through its final stats. Tables with pending MoR deletes
+fall back to the single-node planner (their reads need the seqs map
+anyway).
 """
 
 from __future__ import annotations
@@ -117,41 +120,17 @@ def plan_files_distributed(
             "distributed planning needs a sharded checkpoint base "
             f"({table_log.CKPT_LIST_FORMAT}) — use read_snapshot_pruned"
         )
-    fields = chain[-1]["base"] if chain else base_idx["base"]
+    fold = table_log.fold(chain)
+    fields = base_idx["base"] if fold.fields is None else fold.fields
     if fields.get("deletes"):
         raise ValueError(
             "pending MoR deletes: the read needs the seqs map — use "
             "read_snapshot_pruned"
         )
-    total = sum(sm["n_files"] for sm in base_idx["shards"])
-    # fold the delta chain FIRST (O(commits) small records, pure
-    # driver-side dict work): net per-file stats overrides + adds/
-    # removals. `touched_stats` (stats set/deleted on files the chain
-    # did not add) must be force-emitted by executors — the stale
-    # checkpoint stats could wrongly reject a file whose NEW stats
-    # admit it; the driver re-decides those through the override.
-    recheck: dict[str, dict | None] = {}  # file -> overriding stats
-    added: set[str] = set()
-    removed: set[str] = set()
-    for d in chain:
-        total += len(d.get("files_added", ())) - len(d.get("files_removed", ()))
-        for f in d.get("files_removed", ()):
-            if f in added:
-                added.discard(f)
-            else:
-                removed.add(f)
-            recheck.pop(f, None)
-        for f in d.get("files_added", ()):
-            added.add(f)
-            removed.discard(f)
-            recheck[f] = None
-        for f in d.get("stats_del", ()):
-            if f not in removed:
-                recheck[f] = None
-        for f, s in (d.get("stats_set") or {}).items():
-            if f not in removed:
-                recheck[f] = s
-    touched_stats = sorted(set(recheck) - added)
+    # base members whose stats a delta changed must be force-emitted by
+    # executors: the stale checkpoint stats could wrongly reject a file
+    # whose NEW stats admit it; the driver re-decides them below
+    restatted = sorted(set(fold.stats) - fold.added - fold.removed)
     # driver-side envelope exclusion from the index alone (as before)
     shards = [
         sm["path"]
@@ -166,27 +145,24 @@ def plan_files_distributed(
         .option("root", root)
         .option("shards", json.dumps(shards))
         .option("preds", json.dumps([list(p) for p in preds]))
-        .option("force", json.dumps(touched_stats))
+        .option("force", json.dumps(restatted))
         .load()
         .collect()
         if shards
         else []
     )
-    survivors = {r["file"] for r in rows}
-    # apply the fold: removed files drop; delta-added files and
-    # emitted re-statted MEMBERS re-decide through their new stats
-    # (a recheck key the executors did not emit and the chain did not
-    # add is an orphan stats entry — never a member, never planned)
-    survivors -= removed
-    for f, st in recheck.items():
-        if f not in added and f not in survivors:
-            continue  # orphan stats key or member of an excluded shard
-        if table_log.stats_check(st, preds):
-            survivors.add(f)
-        else:
+    # removed files drop; the emitted re-statted members and every
+    # delta-added file re-decide through their final stats
+    survivors = {r["file"] for r in rows} - fold.removed
+    for f in restatted:
+        if f in survivors and not table_log.stats_check(fold.stats[f], preds):
             survivors.discard(f)
+    survivors.update(
+        f for f in fold.added if table_log.stats_check(fold.stats.get(f), preds)
+    )
     # then the partition-path check, as in read_snapshot_pruned_multi
     spec = fields.get("partition_spec") or []
     types = S._schema_types(fields.get("schema") or [])
     planned = [f for f in survivors if table_log.path_check(f, preds, spec, types)]
+    total = sum(sm["n_files"] for sm in base_idx["shards"]) + fold.files_delta
     return sorted(planned), len(shards), total

@@ -148,9 +148,9 @@ class LogStreamReader(DataSourceStreamReader):
         # fs-native paths through the one resolver (normalizes a branch
         # member's ../../ on object stores), then one batched stat call
         # and greedy packing in feed order (see _BUNDLE_BYTES)
-        fs, _ = fsio._pa_fs(self.root, session_free=True)
+        fs, _ = fsio._pa_fs(self.root)
         paths = [
-            (fsio._pa_fs(f"{self.root}/{rel}", session_free=True)[1], *rest)
+            (fsio._pa_fs(f"{self.root}/{rel}")[1], *rest)
             for rel, *rest in entries
         ]
         parts: list[InputPartition] = []
@@ -178,7 +178,7 @@ class LogStreamReader(DataSourceStreamReader):
         # s3://-style roots), so the filesystem is re-resolved here on
         # the executor — a bare pq.read_table would try the stripped
         # path against the local FS and fail for any non-local root
-        fs, _ = fsio._pa_fs(self.root, session_free=True)
+        fs, _ = fsio._pa_fs(self.root)
         resolve = partition.resolve or tuple(
             ((name,), False, None) for name, _ in self.columns
         )

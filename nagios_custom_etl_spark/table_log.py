@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterable
+from dataclasses import dataclass, field
 from urllib.parse import unquote
 
 SNAP_DIR = "_snapshots"
@@ -79,7 +80,7 @@ class ArrowLog:
     def __init__(self, root: str):
         from nagios_custom_etl_spark import fsio
 
-        self.fs, self.dir = fsio._pa_fs(snap_dir(root), session_free=True)
+        self.fs, self.dir = fsio._pa_fs(snap_dir(root))
 
     def exists(self, name: str) -> bool:
         from pyarrow import fs as pafs
@@ -175,6 +176,65 @@ def load_base(log, base: dict) -> dict:
     if base.get("has_seqs"):
         state["seqs"] = seqs
     return state
+
+
+@dataclass
+class ChainFold:
+    """A walk's delta chain folded into its net effect on the base — for
+    the planners and the checkpoint writer that keep a sharded base as
+    shards and read only the ones they need. ``stats`` and ``seqs`` map a
+    file to its last value in the chain (None: deleted): the chain-added
+    files' final values and the overrides on base members; a file they
+    do not name keeps the base's value (:meth:`maps`)."""
+
+    fields: dict | None = None  # the last record's non-file fields; None: empty chain
+    files_delta: int = 0  # net change of the file count
+    removed: set[str] = field(default_factory=set)  # base members removed (re-added too)
+    added: set[str] = field(default_factory=set)  # live chain-added files
+    stats: dict = field(default_factory=dict)
+    seqs: dict = field(default_factory=dict)  # since the last drop
+    seqs_dropped: bool = False  # a record without seqs dropped every earlier one
+    seqs_kept: bool | None = None  # the last record carries seqs; None: empty chain
+
+    def maps(
+        self, files: list[str], stats: dict, seqs: dict, base_has_seqs: bool
+    ) -> tuple[dict, dict | None]:
+        """The final stats and seqs maps of ``files`` given the base's
+        maps (seqs None when the folded state carries none, as when the
+        base does not and the chain is empty)."""
+        st = {f: s for f in files if (s := self.stats.get(f, stats.get(f))) is not None}
+        if not (base_has_seqs if self.seqs_kept is None else self.seqs_kept):
+            return st, None
+        base = {} if self.seqs_dropped else seqs
+        return st, {f: q for f in files if (q := self.seqs.get(f, base.get(f))) is not None}
+
+
+def fold(chain: list[dict]) -> ChainFold:
+    """The net effect of ``chain`` (a :func:`walk`'s delta records,
+    oldest first) on its base, by :func:`apply_delta`'s rules: a removed
+    file that no earlier record added is a base member (a valid log only
+    removes present files); a record without ``seqs`` drops every seq."""
+    out = ChainFold()
+    for d in chain:
+        out.fields = d["base"]
+        removed, added = d.get("files_removed", ()), d.get("files_added", ())
+        out.files_delta += len(added) - len(removed)
+        for f in removed:
+            if f in out.added:
+                out.added.discard(f)
+            else:
+                out.removed.add(f)
+        out.added.update(added)
+        out.stats.update(dict.fromkeys(d.get("stats_del", ())))
+        out.stats.update(d.get("stats_set") or {})
+        out.seqs_kept = "seqs" in d
+        if out.seqs_kept:
+            out.seqs.update(dict.fromkeys(d["seqs"]["del"]))
+            out.seqs.update(d["seqs"]["set"])
+        else:
+            out.seqs_dropped = True
+            out.seqs = {}
+    return out
 
 
 def replay(

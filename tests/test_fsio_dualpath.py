@@ -1,20 +1,24 @@
-"""r14-ADVICE coverage for the fsio dual-path layer and its driver-side
-pyarrow companions (optimization round r15):
+"""Coverage for fsio's two routes and their driver-side pyarrow
+companions:
 
-- in the test environment every fsio call takes the LOCAL fast path, so
-  the Hadoop branch of the dual-path functions was dead code under test
-  — a monkeypatched ``_local_path -> None`` sweep keeps it exercised;
+- in the test environment every path is local, so every fsio op takes
+  the pyarrow ``LocalFileSystem`` route and the Hadoop route would be
+  dead code under test — a sweep that makes ``_pa_fs`` return None
+  whenever a session is passed keeps it exercised (session-free footer
+  and log reads keep pyarrow);
 - the one stats kernel (``_table_stats`` via ``_single_file_stats``),
   on the driver and in executor tasks, against a Spark
   ``groupBy(input_file_name())`` aggregate on planted NaN/±Inf/-0.0/
   all-null/escaped-partition/zero-row files;
-- ``create_text_atomic`` race arbitration on the local path (threads);
-- ``_local_path`` URI handling: ``file://host`` remote authority falls
-  back to Hadoop instead of silently dropping the host; the
-  ``_DEFAULT_FS_LOCAL`` cache is identity-guarded against id() reuse;
-- the session-free form of the one pyarrow resolver (``_pa_fs(...,
-  session_free=True)``) accepts bare paths and the Hadoop single-slash
-  ``file:/x`` form;
+- ``create_text_atomic`` race arbitration on the local route (threads);
+- the one pyarrow resolver ``_pa_fs(path, spark=None)``: the ``file:``,
+  ``file:/`` and ``file://localhost`` forms and bare paths under a
+  ``file:`` defaultFS are local; ``file://host`` goes to Hadoop instead
+  of silently dropping the host; the defaultFS verdict cache is
+  identity-guarded against id() reuse; without a session a bare path is
+  local and an unservable path raises;
+- a symlinked root (a fixture that links its tables dir) lists its
+  target, and deleting the link keeps the target;
 - ``_dv_summary`` never materializes the full position column on the
   driver (footer row count + streamed pc.unique — the r14-verdict
   scale-safety fix).
@@ -34,6 +38,15 @@ from nagios_custom_etl_spark.operators import snapshots as S
 @pytest.fixture()
 def root(tmp_path):
     return str(tmp_path / "tab")
+
+
+def _hadoop_only(monkeypatch) -> None:
+    """Send every fsio op with a session down the Hadoop route; callers
+    without one (footer and log reads) keep pyarrow."""
+    real = fsio._pa_fs
+    monkeypatch.setattr(
+        fsio, "_pa_fs", lambda path, spark=None: None if spark is not None else real(path)
+    )
 
 
 def _df(spark, lo, hi):
@@ -229,21 +242,23 @@ def test_create_text_atomic_local_race_single_winner(spark, tmp_path):
 
 
 def test_local_path_uri_forms(spark):
-    assert fsio._local_path(spark, "file:///a/b") == "/a/b"
-    assert fsio._local_path(spark, "file:/a/b") == "/a/b"
-    assert fsio._local_path(spark, "file://localhost/a/b") == "/a/b"
-    # non-empty remote authority: must NOT silently drop the host
-    assert fsio._local_path(spark, "file://nas01/a/b") is None
-    assert fsio._local_path(spark, "hdfs:///a/b") is None
-    assert fsio._local_path(spark, "s3a://bucket/a/b") is None
-    # bare path under a file: defaultFS (the test session's) is local
-    assert fsio._local_path(spark, "/a/b") == "/a/b"
+    """Under a session the local forms map to the one LocalFileSystem; a
+    ``file://`` URI with a remote authority must NOT silently drop the
+    host: it goes to Hadoop (None)."""
+    from pyarrow import fs as pafs
+
+    # a bare path under a file: defaultFS (the test session's) is local
+    for uri in ("file:///a/b", "file:/a/b", "file://localhost/a/b", "/a/b"):
+        fs, path = fsio._pa_fs(uri, spark)
+        assert isinstance(fs, pafs.LocalFileSystem) and path == "/a/b", uri
+    assert fsio._pa_fs("file://nas01/a/b", spark) is None
 
 
 def test_default_fs_cache_identity_guarded(spark):
     """A stale id()-keyed entry from a dead session must not be served to
     a NEW session object that reused the id — the hit is identity-checked
-    (r14 ADVICE)."""
+    (r14 ADVICE): a bare path under its hdfs:// defaultFS goes to
+    Hadoop."""
 
     class FakeSession:
         class _JSC:
@@ -263,7 +278,7 @@ def test_default_fs_cache_identity_guarded(spark):
     # GC'd session had left it behind
     fsio._DEFAULT_FS_LOCAL[id(fake)] = (object(), True)
     try:
-        assert fsio._local_path(fake, "/a/b") is None  # re-probed: hdfs
+        assert fsio._pa_fs("/a/b", fake) is None  # re-probed: hdfs
     finally:
         fsio._DEFAULT_FS_LOCAL.pop(id(fake), None)
 
@@ -272,28 +287,50 @@ def test_pa_fs_session_free_single_slash_file_uri(tmp_path):
     p = tmp_path / "x.json"
     p.write_text("{}")
     # Hadoop single-slash form file:/x
-    fs, path = fsio._pa_fs(f"file:{p}", session_free=True)
+    fs, path = fsio._pa_fs(f"file:{p}")
     with fs.open_input_stream(path) as fh:
         assert fh.read() == b"{}"
-    fs2, path2 = fsio._pa_fs(str(p), session_free=True)
+    fs2, path2 = fsio._pa_fs(str(p))
     with fs2.open_input_stream(path2) as fh:
         assert fh.read() == b"{}"
+
+
+def test_symlinked_root_lists_target_and_delete_keeps_it(spark, tmp_path):
+    """A root that is a symlink (a fixture linking a cached tables dir)
+    lists its target's files, and deleting the link removes the link
+    only — never the target's files."""
+    target = tmp_path / "target"
+    (target / "d").mkdir(parents=True)
+    (target / "a.txt").write_text("hello")
+    (target / "d" / "b.txt").write_text("hi")
+    link = tmp_path / "link"
+    link.symlink_to(target)
+    assert fsio.list_names(spark, str(link)) == ["a.txt", "d"]
+    assert fsio.list_files_with_sizes(spark, str(link)) == [("a.txt", 5), ("d/b.txt", 2)]
+    assert fsio.delete(spark, str(link))
+    assert not link.is_symlink() and not link.exists()
+    assert sorted(p.name for p in target.rglob("*")) == ["a.txt", "b.txt", "d"]
 
 
 # ------------------------------------------------- Hadoop branch sweep
 
 
 def test_hadoop_branch_roundtrip(spark, tmp_path, monkeypatch):
-    """With the local fast path disabled (_local_path -> None), every
-    dual-path fsio op must still behave identically through the Hadoop
-    branch — keeps the remote code path exercised under test (r14
-    ADVICE: in this environment it is otherwise dead code)."""
-    monkeypatch.setattr(fsio, "_local_path", lambda spark, path: None)
+    """With pyarrow out of reach for every op with a session, each fsio
+    op must still behave identically through the Hadoop route — keeps
+    the remote code path exercised under test (r14 ADVICE: in this
+    environment it is otherwise dead code). Text reads come back byte
+    for byte: a trailing newline and a CRLF survive."""
+    _hadoop_only(monkeypatch)
     base = str(tmp_path / "hadoop")
     fsio.mkdirs(spark, f"{base}/d1")
     assert fsio.exists(spark, f"{base}/d1")
     fsio.write_text(spark, f"{base}/d1/a.txt", "hello\nworld")
     assert fsio.read_text(spark, f"{base}/d1/a.txt") == "hello\nworld"
+    for text in ("hello\nworld\n", "a\r\nb"):
+        fsio.write_text(spark, f"{base}/t.txt", text)
+        assert fsio.read_text(spark, f"{base}/t.txt") == text
+    assert fsio.delete(spark, f"{base}/t.txt")
     fsio.create_text_atomic(spark, f"{base}/d1/b.txt", "atomic")
     with pytest.raises(FileExistsError):
         fsio.create_text_atomic(spark, f"{base}/d1/b.txt", "loser")
@@ -320,7 +357,7 @@ def test_hadoop_branch_roundtrip(spark, tmp_path, monkeypatch):
 def test_hadoop_branch_snapshot_table_roundtrip(spark, tmp_path, monkeypatch):
     """One representative snapshot-table flow entirely through the
     Hadoop branch: append, read, mor_delete, compact, metadata_count."""
-    monkeypatch.setattr(fsio, "_local_path", lambda spark, path: None)
+    _hadoop_only(monkeypatch)
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "htab")
@@ -349,11 +386,10 @@ def test_hadoop_branch_snapshot_table_roundtrip(spark, tmp_path, monkeypatch):
 
 
 def test_pyarrow_branch_roundtrip(spark, tmp_path, monkeypatch):
-    """Remote URIs route through pyarrow.fs before Hadoop (r14 verdict
-    item 4). Exercised via file:/// URIs with the local fast path
-    disabled: _pa_fs resolves them to LocalFileSystem, so every dual-path
-    op below runs the pyarrow branch (Hadoop is never reached)."""
-    monkeypatch.setattr(fsio, "_local_path", lambda spark, path: None)
+    """Every path pyarrow serves routes through pyarrow.fs before Hadoop
+    (r14 verdict item 4). Exercised via file:/// URIs, which _pa_fs
+    resolves to LocalFileSystem: every op below runs the pyarrow route
+    (Hadoop is never reached)."""
 
     def no_hadoop(spark, path):
         raise AssertionError(f"fell through to Hadoop for {path}")
@@ -388,18 +424,20 @@ def test_pyarrow_branch_roundtrip(spark, tmp_path, monkeypatch):
     assert not fsio.exists(spark, base)
 
 
-def test_pa_fs_scheme_routing():
+def test_pa_fs_scheme_routing(spark):
     from pyarrow import fs as pafs
 
-    # bare paths: defaultFS territory, never pyarrow
-    assert fsio._pa_fs("/a/b") is None
-    # file:// with a remote authority: Hadoop must resolve the host
-    assert fsio._pa_fs("file://nas01/a/b") is None
-    # local file URI resolves (exercised when the fast path is off)
-    f, p = fsio._pa_fs("file:///a/b")
-    assert isinstance(f, pafs.LocalFileSystem) and p == "/a/b"
-    # unknown scheme pyarrow can't load: Hadoop fallback
-    assert fsio._pa_fs("weirdfs://c@acct.example.net/a") is None
+    # bare paths: local without a session, and under the session's
+    # file: defaultFS
+    for sess in (None, spark):
+        f, p = fsio._pa_fs("/a/b", sess)
+        assert isinstance(f, pafs.LocalFileSystem) and p == "/a/b"
+    # file:// with a remote authority, and an unknown scheme pyarrow
+    # can't load: Hadoop under a session, an error without one
+    for uri in ("file://nas01/a/b", "weirdfs://c@acct.example.net/a"):
+        assert fsio._pa_fs(uri, spark) is None
+        with pytest.raises(Exception):
+            fsio._pa_fs(uri)
 
 
 # ------------------------------------------------- _dv_summary bounds
@@ -479,13 +517,14 @@ def test_pa_fs_cache_hit_resolves_like_first_call(monkeypatch):
 @pytest.mark.parametrize("branch", ["hadoop", "pyarrow"])
 def test_write_bytes_every_branch(spark, tmp_path, monkeypatch, branch):
     """write_bytes lands any bytes-like object byte for byte through the
-    Hadoop branch (bare path, no local fast path) and the pyarrow.fs
+    Hadoop branch (bare path, pyarrow out of reach) and the pyarrow.fs
     branch (file:/// URI, Hadoop unreachable)."""
     import pyarrow as pa
 
-    monkeypatch.setattr(fsio, "_local_path", lambda spark, path: None)
     base = str(tmp_path / "b")
-    if branch == "pyarrow":
+    if branch == "hadoop":
+        _hadoop_only(monkeypatch)
+    else:
         def no_hadoop(spark, path):
             raise AssertionError(f"fell through to Hadoop for {path}")
 
@@ -502,7 +541,7 @@ def test_write_bytes_every_branch(spark, tmp_path, monkeypatch, branch):
 def test_hadoop_branch_driver_written_append(spark, tmp_path, monkeypatch):
     """A driver-written data file reaches a destination only Hadoop
     serves: it goes through fsio.write_bytes like every metadata file."""
-    monkeypatch.setattr(fsio, "_local_path", lambda spark, path: None)
+    _hadoop_only(monkeypatch)
     root = str(tmp_path / "htab")
     df = spark.range(0, 20).selectExpr("id i", "concat('v', id) s")
     assert S._append(df, root, stats_cols=["i"], single_file=True, driver=True) == 1

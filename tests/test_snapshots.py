@@ -253,6 +253,52 @@ def test_vacuum_keeps_noncontiguous_versions_reconstructible(spark, root):
     assert _rows(S.read_snapshot(spark, root)) == [(i, f"r{i}") for i in range(14)]
 
 
+def _folded(base: dict, fold) -> dict:
+    """A full state from a base and the chain fold over it: files, stats
+    and seqs as :func:`table_log.replay` rebuilds them."""
+    files = sorted((set(base["files"]) - fold.removed) | fold.added)
+    stats, seqs = fold.maps(files, base["stats"], base.get("seqs") or {}, "seqs" in base)
+    return {"files": files, "stats": stats, "seqs": seqs}
+
+
+def test_chain_fold_net_effect_matches_apply_delta():
+    """table_log.fold over hand-built delta records: a base member
+    removed and re-added, stats set then deleted, a record without seqs
+    after ones with them (every seq drops, later records start afresh).
+    Over every prefix of the chain, the base plus the fold equals the
+    records folded one by one with apply_delta."""
+    import functools
+
+    base = {
+        "files": ["a", "b", "c"],
+        "stats": {f: {"i": [n, n + 1]} for n, f in enumerate("abc")},
+        "seqs": {"a": 1, "b": 1, "c": 1},
+    }
+
+    def delta(v, **kw):
+        return {"format": table_log.DELTA_FORMAT, "base": {"version": v}, **kw}
+
+    chain = [
+        delta(2, files_added=["d"], files_removed=["a"], stats_del=["a"],
+              stats_set={"d": {"i": [6, 7]}}, seqs={"set": {"d": 2}, "del": ["a"]}),
+        delta(3, files_added=["a"], stats_set={"a": {"i": [8, 9]}, "b": {"i": [2, 9]}},
+              seqs={"set": {"a": 3}, "del": []}),
+        delta(4, files_removed=["d"], stats_del=["d"], stats_set={"c": {"i": [4, 6]}},
+              seqs={"set": {}, "del": ["b", "d"]}),
+        delta(5, files_added=["e"], stats_del=["c"], stats_set={"e": {"i": [1, 1]}}),
+        delta(6, files_added=["f"], seqs={"set": {"f": 6}, "del": []}),
+    ]
+    for k in range(len(chain) + 1):
+        want = functools.reduce(table_log.apply_delta, chain[:k], base)
+        got = _folded(base, table_log.fold(chain[:k]))
+        assert got == {key: want.get(key) for key in got}, k
+    fold = table_log.fold(chain)
+    assert fold.fields == {"version": 6} and fold.files_delta == 2
+    assert fold.removed == {"a"} and fold.added == {"a", "e", "f"}
+    assert fold.stats["c"] is None and fold.stats["a"] == {"i": [8, 9]}
+    assert fold.seqs_dropped and fold.seqs == {"f": 6}
+
+
 @pytest.mark.parametrize("trial", [0, 1, 2])
 def test_delta_log_random_op_sequences_reconstruct(spark, root, trial, monkeypatch):
     """Model-based randomized guard for the delta-log storage layer
@@ -353,6 +399,7 @@ def test_delta_log_random_op_sequences_reconstruct(spark, root, trial, monkeypat
     assert retained == set(versions) | {
         x for x in retained if x not in versions
     }  # every modeled version still listed is checked below
+    sharded_at = None
     for v, expect in sorted(versions.items()):
         if v not in retained:
             continue
@@ -365,6 +412,15 @@ def test_delta_log_random_op_sequences_reconstruct(spark, root, trial, monkeypat
         assert [pa_state.get(k) for k in ("files", "stats", "seqs")] == [
             m.get(k) for k in ("files", "stats", "seqs")
         ], f"replay v{v}"
+        # over a sharded base, the shards plus the chain fold (what the
+        # pruned planners and the incremental checkpoint read) rebuild it
+        log = table_log.ArrowLog(root)
+        _, base, chain, _ = table_log.walk(log, v)
+        if base.get("format") == table_log.CKPT_LIST_FORMAT:
+            sharded_at = v
+            assert _folded(table_log.load_base(log, base), table_log.fold(chain)) == {
+                k: pa_state.get(k) for k in ("files", "stats", "seqs")
+            }, f"fold v{v}"
         assert S.metadata_count(spark, root, version=v) == len(expect)
         # sharded pruned planner == full plan (same candidates superset
         # contract, same total) at every retained version
@@ -382,6 +438,20 @@ def test_delta_log_random_op_sequences_reconstruct(spark, root, trial, monkeypat
                 .collect()
             )
             assert got == [e for e in expect if lo <= e[0] <= hi], f"pruned v{v}"
+    if trial == 2:
+        assert sharded_at is not None
+        # the newest sharded-base version: the distributed planner plans
+        # the files the single-node planner's per-file check keeps
+        from nagios_custom_etl_spark.sources.manifest_scan import plan_files_distributed
+
+        expect = versions[sharded_at]
+        preds = [("i", expect[0][0], expect[min(2, len(expect) - 1)][0])]
+        planned, _, total = plan_files_distributed(spark, root, sharded_at, preds)
+        pm = S._plan_pruned_state(spark, root, sharded_at, preds)
+        assert planned == sorted(
+            f for f in pm["files"] if table_log.stats_check(pm["stats"].get(f), preds)
+        )
+        assert total == pm["_files_total"]
     # expired versions refuse instead of resurrecting from the cache
     expired = [x for x in range(1, max(retained)) if x not in retained]
     if expired:
@@ -5011,11 +5081,9 @@ def test_distributed_ckpt_write_byte_identical_to_driver_loop(spark, root):
         }
         # wipe the checkpoint, rewrite through the DRIVER loop: the
         # pure payload must reproduce the same names and bytes
-        fs, jp, _ = fsio._fs(spark, S._ckpt_path(root, 1))
-        fs.delete(jp, False)
+        fsio.delete(spark, S._ckpt_path(root, 1), recursive=False)
         for n in names:
-            f2, j2, _ = fsio._fs(spark, f"{S._snap_dir(root)}/{n}")
-            f2.delete(j2, False)
+            fsio.delete(spark, f"{S._snap_dir(root)}/{n}", recursive=False)
         S._DIST_CKPT_MIN_SHARDS = 9999
         S._DIST_SHARD_WRITES["n"] = 0
         S._STATE_CACHE.clear()
