@@ -736,18 +736,11 @@ def _plan_pruned_state(
                 # read only those, and fold the chain over their members
                 # plus every delta-added file
                 fold = table_log.fold(chain)
-                files: set[str] = set()
-                stats: dict = {}
-                seqs: dict = {}
-                for sm in keep:
-                    sh = log.read_json(sm["path"])
-                    files.update(sh["files"])
-                    stats.update(sh.get("stats") or {})
-                    seqs.update(sh.get("seqs") or {})
+                part = table_log.load_base(log, {**base_obj, "shards": keep})
                 m = dict(base_obj["base"] if fold.fields is None else fold.fields)
-                m["files"] = sorted((files - fold.removed) | fold.added)
+                m["files"] = sorted((set(part["files"]) - fold.removed) | fold.added)
                 m["stats"], sq = fold.maps(
-                    m["files"], stats, seqs, bool(base_obj.get("has_seqs"))
+                    m["files"], part["stats"], part.get("seqs") or {}, "seqs" in part
                 )
                 if sq is not None:
                     m["seqs"] = sq
